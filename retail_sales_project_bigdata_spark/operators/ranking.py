@@ -151,7 +151,7 @@ def grouped_topk_rank(
     (Optimization round r9, guide §2.4: one exchange instead of the
     two-phase path's range + hash exchanges and its persist.)
 
-    Requirements: ``k`` below ``spark.sql.optimizer.windowGroupLimitThreshold``
+    Requirements: ``k`` at most ``spark.sql.optimizer.windowGroupLimitThreshold``
     (default 1000) for the rewrite to fire, and ``order_cols`` a total
     order within each group — same contract as grouped_row_number, so
     the surviving ranks are IDENTICAL to the two-phase path's.  The
@@ -160,7 +160,7 @@ def grouped_topk_rank(
     grouped_row_number's output dtype.
     """
     # Enforce the documented contract instead of trusting it (ADVICE r9):
-    # a k at or above the threshold would NOT fire the WindowGroupLimit
+    # a k above the threshold would NOT fire the WindowGroupLimit
     # rewrite and silently degrade to a whole-stratum single-task window
     # sort — exactly the scale hazard this module exists to prevent.
     # Fail loudly so the caller reaches for grouped_row_number instead.
@@ -169,9 +169,9 @@ def grouped_topk_rank(
             "spark.sql.optimizer.windowGroupLimitThreshold", "1000"
         )
     )
-    if int(k) >= threshold:
+    if int(k) > threshold:
         raise ValueError(
-            f"grouped_topk_rank: k={k} >= windowGroupLimitThreshold="
+            f"grouped_topk_rank: k={k} > windowGroupLimitThreshold="
             f"{threshold}; the WindowGroupLimit rewrite would not fire "
             "and the window would sort whole strata on single tasks — "
             "use grouped_row_number for data-proportional limits"

@@ -4,7 +4,8 @@ tasks went — the ``.explain and iterate`` loop's runtime half.
 ``profile_query`` executes the plan under a dedicated job group, then
 reads the driver's status tracker for the jobs/stages/tasks that group
 launched, and pairs that with facts read from the *finalized* physical
-plan (exchanges, joins, python-eval nodes, whole-stage-codegen spans).
+plan (:func:`plans.plan_facts`: exchanges, joins, python nodes, codegen
+spans).
 Execution goes through the DataFrame's own ``queryExecution`` (via
 ``toRdd().count()``, a distributed count — nothing is collected to the
 driver), because a ``df.write`` action compiles a *separate* query
@@ -19,11 +20,12 @@ CLI: ``python -m retail_sales_project_bigdata_spark profile <name>``.
 
 from __future__ import annotations
 
-import re
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from retail_sales_project_bigdata_spark.plans import plan_facts
 
 
 def profile_df(df: DataFrame, label: str = "profile") -> dict[str, object]:
@@ -58,9 +60,7 @@ def profile_df(df: DataFrame, label: str = "profile") -> dict[str, object]:
             n_tasks += st.numTasks
             n_failed += st.numFailedTasks
 
-    # The finalized (post-AQE) plan of the execution that actually ran —
-    # codegen span ids (`*(N)` markers) only exist on this one.
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    # Facts of the finalized (post-AQE) plan of the execution that ran.
     return {
         "label": label,
         "wall_sec": round(wall, 3),
@@ -68,15 +68,7 @@ def profile_df(df: DataFrame, label: str = "profile") -> dict[str, object]:
         "stages": n_stages,
         "tasks": n_tasks,
         "failed_tasks": n_failed,
-        "exchanges": plan.count("Exchange"),
-        "broadcast_joins": plan.count("BroadcastHashJoin"),
-        "sortmerge_joins": plan.count("SortMergeJoin"),
-        "shuffledhash_joins": plan.count("ShuffledHashJoin"),
-        "python_eval_nodes": sum(
-            plan.count(n)
-            for n in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
-        ),
-        "codegen_spans": len(set(re.findall(r"\*\((\d+)\)", plan))),
+        **plan_facts(df),
     }
 
 

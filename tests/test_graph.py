@@ -281,28 +281,18 @@ def test_copurchase_edges_plan_within_budget(spark):
     symmetrizing union).  Audit it directly, pre-checkpoint: a shuffle /
     cartesian / python-eval regression in edge construction must fail
     the suite, not surface at 100 TB."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from plan_audit import summarize
-
     from retail_sales_project_bigdata_spark.operators.graph import (
         copurchase_edges,
     )
+    from retail_sales_project_bigdata_spark.plans import plan_facts
     from tests.conftest import SF_SMALL
 
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        plan = (
-            copurchase_edges(spark, SF_SMALL)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        s = plan_facts(copurchase_edges(spark, SF_SMALL))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
-    s = summarize(plan)
     # measured r10: one per-order shuffle for the pair explode, one for
     # the distinct, one re-used across the union's mirrored branch
     assert s["shuffle_exchanges"] <= 3, s

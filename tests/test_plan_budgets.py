@@ -1,7 +1,7 @@
-"""Plan-budget regression gate: every headline query's physical plan
+"""Plan-budget regression gate: every registered query's physical plan
 must stay within its checked-in budget of shuffle exchanges,
 python-eval nodes, and cartesian products (tests/plan_budgets.json,
-generated by tools/plan_budget.py).
+generated by tools/plan_budget.py from ``plans.plan_facts``).
 
 Nothing executes — plans are compiled only — so the whole sweep is
 seconds.  A failure means a code change added a shuffle / Python node
@@ -26,8 +26,7 @@ BUDGET_PATH = os.path.join(os.path.dirname(__file__), "plan_budgets.json")
 
 
 def test_headline_plans_within_budget(spark):
-    from plan_audit import HEADLINE, summarize
-
+    from retail_sales_project_bigdata_spark.plans import plan_facts
     from retail_sales_project_bigdata_spark.registry import queries
 
     with open(BUDGET_PATH) as f:
@@ -35,9 +34,7 @@ def test_headline_plans_within_budget(spark):
 
     from plan_budget import budgeted_names
 
-    missing = sorted(
-        (set(HEADLINE) | set(budgeted_names(queries()))) - set(budgets)
-    )
+    missing = sorted(set(budgeted_names(queries())) - set(budgets))
     assert not missing, (
         f"queries without a plan budget: {missing} — run "
         "`python tools/plan_budget.py` and review the JSON diff"
@@ -65,15 +62,9 @@ def test_headline_plans_within_budget(spark):
             # that persists at build time must not leave cached subtrees
             # that re-plan later queries as InMemoryTableScan.
             spark.catalog.clearCache()
-            plan = (
-                qs[name](spark, SF_SMALL)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            s = summarize(plan)
+            s = plan_facts(qs[name](spark, SF_SMALL))
             for key, cap in budget.items():
-                if int(s[key]) > cap:
+                if s[key] > cap:
                     over.append(f"{name}.{key}: {s[key]} > budget {cap}")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)

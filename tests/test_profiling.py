@@ -31,3 +31,43 @@ def test_profile_counts_python_stage(spark):
     prof = profile_query(spark, "ann_mmr_topk", SF_SMALL)
     assert prof["python_eval_nodes"] >= 1  # the applyInPandas rerank
     assert prof["failed_tasks"] == 0
+
+
+def test_profile_reports_executed_plan_facts(spark):
+    """A cached fan-out read twice plus one broadcast join, counted by
+    hand: the cached aggregate's shuffle runs once, the dim join adds one
+    broadcast exchange and one broadcast hash join, the union adds
+    nothing.  The plan text, by contrast, prints the cached body at both
+    scan sites and, under AQE, prints the initial and the final plan."""
+    from pyspark.sql import functions as F
+
+    from retail_sales_project_bigdata_spark.plans import plan_facts
+    from retail_sales_project_bigdata_spark.profiling import profile_df
+
+    agg = (
+        spark.range(1000)
+        .groupBy((F.col("id") % 10).alias("g"))
+        .agg(F.count("*").alias("n"))
+        .persist()
+    )
+    try:
+        dim = spark.range(10).withColumnRenamed("id", "g")
+        df = agg.join(F.broadcast(dim), "g").unionByName(agg.filter("g > 4"))
+        prof = profile_df(df, label="fanout")
+        facts = plan_facts(df)
+    finally:
+        agg.unpersist()
+    assert {k: prof[k] for k in facts} == facts
+    assert facts.pop("codegen_spans") >= 1
+    assert facts == {
+        "shuffle_exchanges": 1,
+        "other_shuffle_exchanges": 0,
+        "broadcast_exchanges": 1,
+        "broadcast_hash_joins": 1,
+        "sort_merge_joins": 0,
+        "shuffled_hash_joins": 0,
+        "nested_loop_joins": 0,
+        "cartesian": 0,
+        "python_eval": 0,
+        "python_eval_nodes": 0,
+    }

@@ -123,18 +123,28 @@ def test_grouped_helpers_match_spark_windows(spark):
 
 
 def test_grouped_topk_rank_rejects_non_literal_scale_k(spark):
-    """k at/above windowGroupLimitThreshold must fail loudly: the
+    """k above windowGroupLimitThreshold must fail loudly: the
     WindowGroupLimit rewrite would not fire and the window would sort
-    whole strata on single tasks (ADVICE r9)."""
+    whole strata on single tasks (ADVICE r9).  k equal to the threshold
+    is the largest k the rewrite accepts."""
     import pytest
 
     from retail_sales_project_bigdata_spark.operators.ranking import (
         grouped_topk_rank,
     )
+    from retail_sales_project_bigdata_spark.plans import node_class, nodes
 
-    df = spark.range(10).withColumn("g", F.lit("a"))
+    threshold = int(
+        spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold")
+    )
+    # more rows than k, or the optimizer drops the limit as useless
+    df = spark.range(3 * threshold).withColumn(
+        "g", (F.col("id") % 2).cast("string")
+    )
     with pytest.raises(ValueError, match="windowGroupLimitThreshold"):
-        grouped_topk_rank(df, ["g"], [F.asc("id")], "rk", 1000)
+        grouped_topk_rank(df, ["g"], [F.asc("id")], "rk", threshold + 1)
+    at = grouped_topk_rank(df, ["g"], [F.asc("id")], "rk", threshold)
+    assert "WindowGroupLimitExec" in {node_class(n) for n in nodes(at)}
 
 
 def test_stratum_queries_have_no_per_stratum_window(spark):

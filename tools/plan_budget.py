@@ -1,7 +1,7 @@
 """Generate tests/plan_budgets.json — the checked-in per-query plan
 budgets that tests/test_plan_budgets.py enforces.
 
-Each headline query gets a budget of scale-relevant plan facts
+Each registered query gets a budget of scale-relevant plan facts
 (shuffle exchange count, python-eval node count, cartesian products).
 The test rebuilds every plan (analysis only — nothing executes) and
 fails if any count EXCEEDS its budget, so a rewrite that silently adds
@@ -18,16 +18,18 @@ import json
 import sys
 
 sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
 
-from plan_audit import HEADLINE, summarize  # noqa: E402
+from retail_sales_project_bigdata_spark.plans import plan_facts  # noqa: E402
 
 BUDGET_PATH = "/root/repo/tests/plan_budgets.json"
 
-# The facts a budget locks down. broadcast/sort-merge join MIXES are
-# audited in PLANS.md instead: AQE may legitimately flip SMJ→broadcast
-# at runtime, but it never *adds* a shuffle exchange to a logical plan
-# or introduces a Python eval node — those only regress via code.
+# The plan_facts keys a budget locks down. Broadcast/sort-merge join
+# MIXES are left to `python -m retail_sales_project_bigdata_spark
+# explain|profile <name>`: AQE may legitimately flip SMJ→broadcast at
+# runtime, but it never *adds* a shuffle exchange to a logical plan or
+# introduces a Python eval node — those only regress via code.
+# ``shuffle_exchanges`` counts hash-partitioned shuffles, each distinct
+# node once (a cached body read by several consumers executes once).
 # ``python_eval`` counts Batch/ArrowEvalPython (scalar row/batch UDFs —
 # banned in relational paths, budget 0 everywhere) and deliberately NOT
 # the sanctioned Arrow group-map nodes (FlatMapGroupsInPandas /
@@ -43,7 +45,7 @@ def budgeted_names(queries: dict) -> list[str]:
     micro-batch plans are compiled per-trigger at runtime.  Those are
     held to the same python_eval/cartesian facts by
     tests/test_streaming_plans.py, which asserts on the LAST EXECUTED
-    micro-batch plan captured in streaming.LAST_MICROBATCH_PLANS."""
+    micro-batch plan's facts captured in streaming.LAST_MICROBATCH_FACTS."""
     return sorted(n for n in queries if not n.startswith("streaming_"))
 
 
@@ -52,8 +54,8 @@ def current_counts(sf_dir: str) -> dict[str, dict[str, int]]:
     from retail_sales_project_bigdata_spark.session import get_spark
 
     spark = get_spark("plan_budget")
-    # same posture as plan_audit: count on the pre-AQE plan so budgets
-    # are deterministic (AQE placeholders hide/rename exchanges).
+    # count on the pre-AQE plan so budgets are deterministic (an
+    # unexecuted adaptive plan has not yet reused exchanges).
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     queries = entrymod.queries()
     out: dict[str, dict[str, int]] = {}
@@ -63,9 +65,8 @@ def current_counts(sf_dir: str) -> dict[str, dict[str, int]]:
         # InMemoryTableScan inside LATER queries' plans, shifting their
         # exchange counts by compile order.
         spark.catalog.clearCache()
-        plan = queries[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        s = summarize(plan)
-        out[name] = {k: int(s[k]) for k in BUDGET_KEYS}
+        facts = plan_facts(queries[name](spark, sf_dir))
+        out[name] = {k: facts[k] for k in BUDGET_KEYS}
     spark.catalog.clearCache()
     return out
 
