@@ -16,14 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from retail_sales_project_bigdata_spark.session import gate_mode
-
 RF_NUM_TREES = 100  # ChurnPrediction.java:309-314
 RF_MAX_DEPTH = 8
-# gate-mode trainer sizes (session.gate_mode): the correctness gate
-# checks schema/row contracts of rows-only trainers, not model quality
-RF_NUM_TREES_GATE = 10
-RF_MAX_DEPTH_GATE = 5
 RF_SEED = 42
 SPLIT_SEED = 42  # ChurnPrediction.java:321
 
@@ -68,8 +62,8 @@ def build_churn_pipeline():
     rf = RandomForestClassifier(
         featuresCol="features",
         labelCol="label",
-        numTrees=RF_NUM_TREES_GATE if gate_mode() else RF_NUM_TREES,
-        maxDepth=RF_MAX_DEPTH_GATE if gate_mode() else RF_MAX_DEPTH,
+        numTrees=RF_NUM_TREES,
+        maxDepth=RF_MAX_DEPTH,
         seed=RF_SEED,
     )
     return Pipeline(stages=[*indexers, encoder, assembler, scaler, rf])
@@ -208,7 +202,7 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 numFeatures=QC_NUM_FEATURES,
             ),
             LogisticRegression(
-                maxIter=10 if gate_mode() else 25,
+                maxIter=25,
                 regParam=0.01,
                 standardization=True,
             ),
@@ -252,15 +246,10 @@ def tune_churn_cv(features: DataFrame):
     features = _prepare_features(features)
     pipeline = build_churn_pipeline()
     rf = pipeline.getStages()[-1]
-    # gate mode: single grid point + 2 folds — the sweep exists to pick
-    # capacity, which the correctness gate doesn't exercise
-    depth_grid = CV_DEPTH_GRID[:1] if gate_mode() else CV_DEPTH_GRID
-    trees_grid = CV_TREES_GRID[:1] if gate_mode() else CV_TREES_GRID
-    n_folds = 2 if gate_mode() else CV_FOLDS
     grid = (
         ParamGridBuilder()
-        .addGrid(rf.maxDepth, depth_grid)
-        .addGrid(rf.numTrees, trees_grid)
+        .addGrid(rf.maxDepth, CV_DEPTH_GRID)
+        .addGrid(rf.numTrees, CV_TREES_GRID)
         .build()
     )
     evaluator = BinaryClassificationEvaluator(
@@ -270,7 +259,7 @@ def tune_churn_cv(features: DataFrame):
         estimator=pipeline,
         estimatorParamMaps=grid,
         evaluator=evaluator,
-        numFolds=n_folds,
+        numFolds=CV_FOLDS,
         seed=RF_SEED,
         parallelism=4,
     )

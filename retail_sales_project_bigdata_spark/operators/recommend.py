@@ -83,10 +83,8 @@ def als_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("partkey").cast("int").alias("item"),
         F.col("rating").cast("float").alias("rating"),
     )
-    from retail_sales_project_bigdata_spark.session import gate_mode
-
     als = ALS(
-        maxIter=3 if gate_mode() else ALS_MAX_ITER,
+        maxIter=ALS_MAX_ITER,
         regParam=ALS_REG_PARAM,
         implicitPrefs=True,
         coldStartStrategy="drop",

@@ -27,7 +27,6 @@ from retail_sales_project_bigdata_spark.functions import (
 from retail_sales_project_bigdata_spark.sources import read_table
 
 KMEANS_K_RANGE = range(2, 9)  # SegmentationModel.java:95 (k ∈ {2..8})
-KMEANS_K_RANGE_GATE = range(2, 4)  # gate-mode sweep (session.gate_mode)
 KMEANS_SEED = 123  # SegmentationModel.java:113
 
 FEATURE_COLS = [
@@ -166,17 +165,14 @@ def _run_sweep(spark: SparkSession, sf_dir: str):
 
     scaled = _scaled_features(spark, sf_dir).cache()
     try:
-        from retail_sales_project_bigdata_spark.session import gate_mode
-
         evaluator = ClusteringEvaluator(metricName="silhouette")
         rows, models = [], {}
-        k_range = KMEANS_K_RANGE_GATE if gate_mode() else KMEANS_K_RANGE
-        for k in k_range:
+        for k in KMEANS_K_RANGE:
             model = KMeans(
                 k=k,
                 seed=KMEANS_SEED,
                 featuresCol="features",
-                maxIter=5 if gate_mode() else 20,
+                maxIter=20,
             ).fit(scaled)
             pred = model.transform(scaled)
             silhouette = evaluator.evaluate(pred)

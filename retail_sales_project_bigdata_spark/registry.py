@@ -93,104 +93,37 @@ _EXTRA_QUERIES = {
     "quality_classifier_scores": ml_pipelines.quality_classifier_scores,
 }
 
-# Driver-gate rotation (round 9; scheme introduced round 6): the per-round
-# correctness gate checks the FIRST 50 entries of ``queries()`` in insertion
-# order.  Round 9 is the CERTIFICATION FINISHER (VERDICT r8 item 1): the
-# 12-name stable flagship core returns after its documented one-round
-# suspension, and the remaining 38 slots take every registry name that has
-# never had a driver-side CORRECTNESS row — 16 DuckDB-oracled (the strong
-# rows+schema+hash check) + 22 rows-only entries (ANN/ML/BPE/streaming ops
-# the oracle genuinely cannot express; the driver records them as executed
-# ``no_oracle`` rows, each justified in COVERAGE.md).  12 + 16 + 22 = 50.
-# After this rotation the cumulative ledger (tools/cert_ledger.py) reads
-# 198/198 oracled strict + 28/28 rows-only driver-executed, 0 never
-# checked: the entire registry is driver-certified.  The same list is
-# committed as ``GATE_SUBSET_r09.json`` for the judge.  Regenerate with
-# ``python tools/gate_subset.py 50``.
-GATE_ORDER = [
-    # stable flagship core (restored; kept every round for comparability)
-    "clean_lineitem",
-    "rfm",
-    "churn_features",
-    "baskets_flat",
-    "top_products",
-    "pricing_summary",
-    "dedup_exact",
-    "minhash_lsh_pairs",
-    "ann_bruteforce_topk",
-    "text_quality",
-    "triangle_counts",
-    "quality_funnel",
-    # never driver-certified, DuckDB-oracled (strong check)
-    "streaming_segment_event_counts",
-    "streaming_user_event_counts",
-    "temperature_mixture_sample",
-    "theil_sen_weekly_trend",
-    "token_budget_sample",
-    "token_diversity_by_source",
-    "top_session_paths",
-    "top_supplier",
-    "trend_mann_kendall",
-    "triangle_counts_sampled",
-    "unigram_freq_scores",
-    "user_activity",
-    "user_value_ewma",
-    "vocab_table",
-    "waiting_suppliers",
-    "winsorized_price_stats",
-    # never driver-certified, rows-only (no SQL-expressible oracle;
-    # see COVERAGE.md for each justification)
-    "ann_bruteforce_topk_numpy",
-    "ann_ivf_topk",
-    "ann_ivfpq_topk",
-    "ann_mmr_topk",
-    "ann_pq_topk",
-    "bm25_topk",
-    "bpe_encode_stats",
-    "bpe_train_merges",
-    "churn_model_metrics",
-    "distinct_parts_sketch_rollup",
-    "embedding_near_dup_pairs_numpy",
-    "heavy_hitters_approx",
-    "image_phash_pairs",
-    "pagerank_copurchase",
-    "price_percentiles_approx",
-    "quality_classifier_scores",
-    "rolling_distinct_users_hll",
-    "semantic_dedup_lsh",
-    "streaming_ann_topk",
-    "streaming_session_windows",
-    "streaming_sliding_value",
-    "streaming_stateful_user_sessions",
-]
+
+def _merge(attr: str, extra: dict | None = None) -> dict:
+    """Merge every module's ``attr`` dict in module order, failing LOUD
+    on a name two modules both register (a plain ``dict.update`` would
+    silently keep the later one)."""
+    out: dict = {}
+    owner: dict[str, str] = {}
+    sources = [(m.__name__, getattr(m, attr)) for m in _MODULES]
+    if extra:
+        sources.append((f"{__name__}._EXTRA_{attr}", extra))
+    for src, entries in sources:
+        for name, value in entries.items():
+            if name in out:
+                raise RuntimeError(
+                    f"{attr} name {name!r} registered by both "
+                    f"{owner[name]} and {src}"
+                )
+            out[name] = value
+            owner[name] = src
+    return out
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in _MODULES:
-        out.update(mod.QUERIES)
-    out.update(_EXTRA_QUERIES)
-    # Present the gate subset first (the driver checks the first 50 in
-    # insertion order); everything else keeps its module order after it.
-    # Fail LOUD on a name that no longer resolves: silently dropping it
-    # would slide the driver's first-50 window onto a different set than
-    # the committed GATE_SUBSET_r*.json artifact claims was certified.
-    missing = [n for n in GATE_ORDER if n not in out]
-    if missing:
-        raise RuntimeError(
-            "GATE_ORDER names missing from the registry (renamed or "
-            f"removed query?): {missing} — update registry.GATE_ORDER "
-            "and GATE_SUBSET_r*.json together"
-        )
-    front = {n: out[n] for n in GATE_ORDER}
-    front.update(out)
-    return front
+    return _merge("QUERIES", _EXTRA_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in _MODULES:
-        out.update(mod.ORACLES)
+    out = _merge("ORACLES")
+    orphans = sorted(set(out) - set(queries()))
+    if orphans:
+        raise RuntimeError(f"ORACLES names with no registered query: {orphans}")
     return out
 
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# Driver testdata star schema (verified against the parquet footers)
+# Driver testdata star schema (tests/test_schemas.py checks every footer)
 # ---------------------------------------------------------------------------
 
 REGION = T.StructType(
@@ -67,7 +67,7 @@ ORDERS = T.StructType(
         T.StructField("o_custkey", T.LongType()),
         T.StructField("o_orderstatus", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
+        T.StructField("o_orderdate", T.TimestampNTZType()),
         T.StructField("o_orderpriority", T.StringType()),
     ]
 )
@@ -84,14 +84,14 @@ LINEITEM = T.StructType(
         T.StructField("l_tax", T.DoubleType()),
         T.StructField("l_returnflag", T.StringType()),
         T.StructField("l_linestatus", T.StringType()),
-        T.StructField("l_shipdate", T.TimestampType()),
+        T.StructField("l_shipdate", T.TimestampNTZType()),
     ]
 )
 
 EVENTS = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
+        T.StructField("ts", T.TimestampNTZType()),
         T.StructField("user_id", T.LongType()),
         T.StructField("event_type", T.StringType()),
         T.StructField("value", T.DoubleType()),

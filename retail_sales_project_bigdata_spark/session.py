@@ -86,16 +86,6 @@ def get_spark(
     return spark
 
 
-def gate_mode() -> bool:
-    """True when ``SPARK_GRAFT_GATE_MODE`` is set truthy — local
-    correctness-gate sweeps shrink the ML hyperparameter search (smaller
-    k-sweep, single-point CV grid) so a full-registry oracle run fits the
-    gate budget.  Only rows-only queries are affected (the ML trainers
-    have no SQL oracle); the property tests in tests/ run WITHOUT gate
-    mode and keep the full-strength sweeps."""
-    return os.environ.get("SPARK_GRAFT_GATE_MODE", "") not in ("", "0")
-
-
 # SparkContext application ids that already had the package zip shipped
 # (plain set of strings — contexts are recreated with fresh ids, and a
 # dead context's leftover id costs nothing).  Guarded by _PKG_LOCK: two

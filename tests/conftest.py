@@ -6,15 +6,13 @@ import pytest
 
 sys.path.insert(0, "/root/repo")
 
+from retail_sales_project_bigdata_spark.schemas import TESTDATA_SCHEMAS
 from retail_sales_project_bigdata_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = list(TESTDATA_SCHEMAS)
 
 
 @pytest.fixture(scope="session")

@@ -25,13 +25,13 @@ def test_oracle_parity(spark, duck, name):
 @pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_query_runs(spark, name):
     """Rows-only smoke for every query (driver runs the same weaker check
-    for entries without an oracle) + the gate-output convention: every
-    registry entry is a gate-rotation candidate, and the driver's
-    correctness gate canonicalizes results with a pandas sort that dies
-    on list cells (round-6 ``embedding_quantize_int8`` red row:
-    ``TypeError: unhashable type: 'list'``).  So gate-facing outputs
-    carry SCALAR top-level columns only — serialize arrays with
-    ``array_join`` (DuckDB mirror ``array_to_string``) or explode;
+    for entries without an oracle) + the output convention: the driver's
+    correctness gate may check any registry entry, and it canonicalizes
+    results with a pandas sort that dies on list cells (round-6
+    ``embedding_quantize_int8`` red row: ``TypeError: unhashable type:
+    'list'``).  So registered outputs carry SCALAR top-level columns
+    only — serialize arrays with ``array_join`` (DuckDB mirror
+    ``array_to_string``) or explode;
     keep typed-array forms as non-registered library functions (e.g.
     ``embedding_quantize_int8_vectors``)."""
     from pyspark.sql.types import ArrayType, MapType, StructType
@@ -57,39 +57,6 @@ def test_entry_smoke(spark):
     assert df.count() > 0
 
 
-def test_gate_order_matches_committed_artifact():
-    """The driver certifies the FIRST 50 registry entries; the committed
-    GATE_SUBSET_r09.json is the judge-auditable record of that subset.
-    They must never drift apart: same 50 names, same order, all present
-    in the registry.  Round 9 is the certification finisher (VERDICT r8
-    item 1): the 12-name stable core returns plus every never-certified
-    name — 16 DuckDB-oracled (strong rows+schema+hash check) + 22
-    rows-only entries the oracle cannot express (the driver records
-    those as executed ``no_oracle`` rows)."""
-    import json
-
-    from retail_sales_project_bigdata_spark.registry import GATE_ORDER
-
-    artifact = json.load(open("/root/repo/GATE_SUBSET_r09.json"))
-    assert artifact["names"] == GATE_ORDER
-    assert len(GATE_ORDER) == 50
-    qs = entrymod.queries()
-    assert list(qs)[:50] == GATE_ORDER
-    oracles = entrymod.oracle_sql()
-    # The artifact's oracled/rows-only split must reflect reality.
-    assert artifact["first_time_oracled"] == [
-        n
-        for n in GATE_ORDER
-        if n in oracles and n not in artifact["stable_core"]
-    ]
-    assert artifact["first_time_rows_only"] == [
-        n for n in GATE_ORDER if n not in oracles
-    ]
-    assert len(artifact["stable_core"]) == 12
-    assert len(artifact["first_time_oracled"]) == 16
-    assert len(artifact["first_time_rows_only"]) == 22
-
-
 def test_package_shipped_to_python_workers(spark):
     """Module-level functions inside mapInPandas/applyInPandas are
     pickled by reference, so Python workers must be able to import this
@@ -100,7 +67,8 @@ def test_package_shipped_to_python_workers(spark):
     ``media_stats_by_modality`` raised ModuleNotFoundError in the worker
     until ``session.ensure_package_on_workers`` shipped a package zip
     through addPyFile.  Assert the ship actually happens on the shared
-    read path (tools/driver_gate_sim.py is the foreign-cwd e2e proof)."""
+    read path (test_entry_loaded_by_path_from_foreign_cwd is the
+    end-to-end proof)."""
     from retail_sales_project_bigdata_spark.sources import read_table
 
     read_table(spark, SF_SMALL, "region")
@@ -108,3 +76,44 @@ def test_package_shipped_to_python_workers(spark):
         "retail_sales_project_bigdata_spark_pkg" in f
         for f in spark.sparkContext.listFiles
     )
+
+
+_FOREIGN_CWD_SCRIPT = """
+import importlib.util, sys
+spec = importlib.util.spec_from_file_location("__spark_entry__", sys.argv[1])
+mod = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(mod)
+from retail_sales_project_bigdata_spark.session import get_spark
+spark = get_spark("foreign_cwd", shuffle_partitions=2)
+entry_rows = len(mod.entry(spark).collect())
+media = mod.queries()["media_stats_by_modality"](spark, sys.argv[2])
+print("ROWS", entry_rows, len(media.collect()))
+"""
+
+
+def test_entry_loaded_by_path_from_foreign_cwd(tmp_path):
+    """The driver loads ``__spark_entry__.py`` by file path from a cwd
+    outside the repo.  The entry module must bootstrap ``sys.path``
+    itself, and the Python workers (whose cwd is the JVM's) must import
+    the shipped package: ``media_stats_by_modality`` is a mapInPandas
+    query that raised ModuleNotFoundError in the worker in round 7."""
+    import os
+    import subprocess
+    import sys
+
+    entry_path = os.path.abspath(entrymod.__file__)
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    env.pop("PYTHONPATH", None)  # the repo must come from the entry module
+    out = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD_SCRIPT, entry_path, SF_SMALL],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    line = [x for x in out.stdout.splitlines() if x.startswith("ROWS ")][-1]
+    entry_rows, media_rows = map(int, line.split()[1:])
+    assert entry_rows > 0
+    assert media_rows > 0

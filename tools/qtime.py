@@ -7,8 +7,8 @@ optionally dumps ``explain("formatted")`` to a file per query.
 Usage:
     python tools/qtime.py q1 q2 ...            # time each, 1 cold + 2 warm
     python tools/qtime.py --repeat 3 q1 ...
-    python tools/qtime.py --explain-dir plans/r09 --suffix before q1 ...
-    python tools/qtime.py --explain-only --explain-dir plans/r09 ... q1
+    python tools/qtime.py --explain-dir /tmp/explain --suffix before q1 ...
+    python tools/qtime.py --explain-only --explain-dir /tmp/explain ... q1
 
 Respects $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
 """
