@@ -1,11 +1,11 @@
 """Query profiling: run a registered query and report where the time and
 tasks went — the ``.explain and iterate`` loop's runtime half.
 
-``profile_query`` executes the plan under a dedicated job group, then
-reads the driver's status tracker for the jobs/stages/tasks that group
-launched, and pairs that with facts read from the *finalized* physical
-plan (:func:`plans.plan_facts`: exchanges, joins, python nodes, codegen
-spans).
+``profile_query`` builds the DataFrame and executes its plan, each under
+a dedicated job group, then reads the driver's status tracker for the
+jobs/stages/tasks each group launched, and pairs that with facts read
+from the *finalized* physical plan (:func:`plans.plan_facts`: exchanges,
+joins, python nodes, codegen spans).
 Execution goes through the DataFrame's own ``queryExecution`` (via
 ``toRdd().count()``, a distributed count — nothing is collected to the
 driver), because a ``df.write`` action compiles a *separate* query
@@ -28,23 +28,29 @@ from pyspark.sql import DataFrame, SparkSession
 from retail_sales_project_bigdata_spark.plans import plan_facts
 
 
+def _in_job_group(sc, label: str, fn):
+    """Run ``fn()`` under a fresh job group; returns its result, the wall
+    seconds it took and the ids of the jobs it launched."""
+    group = f"{label}-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, label, interruptOnCancel=False)
+    try:
+        t0 = time.perf_counter()
+        out = fn()
+        wall = time.perf_counter() - t0
+    finally:
+        sc.setJobGroup(None, None)
+    return out, wall, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def profile_df(df: DataFrame, label: str = "profile") -> dict[str, object]:
     """Materialize ``df`` (distributed count over its own query execution
     — full execution, no rows to the driver) inside a fresh job group and
     return the runtime + finalized-plan profile."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    group = f"{label}-{uuid.uuid4().hex[:8]}"
+    sc = df.sparkSession.sparkContext
     tracker = sc.statusTracker()
-    sc.setJobGroup(group, label, interruptOnCancel=False)
-    try:
-        t0 = time.perf_counter()
-        df._jdf.queryExecution().toRdd().count()
-        wall = time.perf_counter() - t0
-    finally:
-        sc.setJobGroup(None, None)
-
-    job_ids = sorted(tracker.getJobIdsForGroup(group))
+    _, wall, job_ids = _in_job_group(
+        sc, label, lambda: df._jdf.queryExecution().toRdd().count()
+    )
     n_stages = 0
     n_tasks = 0
     n_failed = 0
@@ -75,7 +81,12 @@ def profile_df(df: DataFrame, label: str = "profile") -> dict[str, object]:
 def profile_query(
     spark: SparkSession, name: str, sf_dir: str
 ) -> dict[str, object]:
-    """Profile a registered query by name (see ``registry.queries``)."""
+    """Profile a registered query by name (see ``registry.queries``).
+
+    The builder also runs under its own job group, so ``build_sec`` and
+    ``build_jobs`` report the construction layer: every Spark job a
+    builder runs before it returns its DataFrame (convergence loops, ML
+    fits, deliberate ``collect()``s)."""
     from retail_sales_project_bigdata_spark.registry import queries
 
     qs = queries()
@@ -84,4 +95,11 @@ def profile_query(
             f"unknown query {name!r}; see `python -m "
             "retail_sales_project_bigdata_spark list`"
         )
-    return profile_df(qs[name](spark, sf_dir), label=name)
+    df, build_wall, build_jobs = _in_job_group(
+        spark.sparkContext, f"{name}-build", lambda: qs[name](spark, sf_dir)
+    )
+    return {
+        **profile_df(df, label=name),
+        "build_sec": round(build_wall, 3),
+        "build_jobs": len(build_jobs),
+    }

@@ -10,13 +10,17 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from retail_sales_project_bigdata_spark.schemas import (
     BROADCAST_MAX_BYTES,
     BROADCASTABLE_TABLES,
     DUNNHUMBY_SCHEMAS,
+    EVENTS,
     TESTDATA_SCHEMAS,
 )
 
@@ -45,13 +49,16 @@ def fan_out(df: DataFrame) -> DataFrame:
 def read_table(
     spark: SparkSession, sf_dir: str, name: str, broadcast_dims: bool = True
 ) -> DataFrame:
-    """Read one testdata parquet table (S3).
+    """Read one testdata parquet table (S3) with its declared schema.
 
-    Schema comes from the parquet footer (no inference cost); the explicit
-    schemas in :mod:`schemas` document/validate the contract.  Dimension
-    tables get a ``broadcast()`` hint — at 100 TB the fact tables shuffle
-    terabytes if a dim join degrades to sort-merge, so the hint is part of
-    the physical design, not an afterthought (SURVEY §2.3 physical note).
+    The schema comes from :data:`schemas.TESTDATA_SCHEMAS` (which
+    ``tests/test_schemas.py`` checks against every footer), so building
+    the read launches no Spark job: without a schema, Spark runs a
+    footer-inference job per read while the query is still being built.
+    An undeclared name raises ``KeyError``.  Dimension tables get a
+    ``broadcast()`` hint — at 100 TB the fact tables shuffle terabytes if
+    a dim join degrades to sort-merge, so the hint is part of the physical
+    design, not an afterthought (SURVEY §2.3 physical note).
 
     Also ships this package to the Python workers (once per
     SparkContext) so Arrow-boundary queries survive a driver whose cwd
@@ -61,9 +68,14 @@ def read_table(
         ensure_package_on_workers,
     )
 
+    if name not in TESTDATA_SCHEMAS:
+        raise KeyError(
+            f"undeclared table {name!r}; "
+            f"declared: {', '.join(TESTDATA_SCHEMAS)}"
+        )
     ensure_package_on_workers(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(path)
     if (
         broadcast_dims
         and name in BROADCASTABLE_TABLES
@@ -89,45 +101,52 @@ def _on_disk_bytes(path: str) -> int:
         return 0
 
 
+def with_events_schema(reader, path: str):
+    """Give a batch or streaming reader the declared ``EVENTS`` schema for
+    the events file at ``path``; returns ``(reader, nanos)``.
+
+    The footer, read on the driver (no Spark job), says whether ``ts`` is
+    stored as TIMESTAMP(NANOS).  Then ``ts`` is declared as the raw int64
+    and ``spark.sql.legacy.parquet.nanosAsLong`` is set as an option of
+    this one read: SQL confs passed as datasource options are merged into
+    the scan's hadoopConf (``newHadoopConfWithOptions``), so the session
+    conf, and every other read in the session, stays unchanged."""
+    if pq.read_schema(path).field("ts").type != pa.timestamp("ns"):
+        return reader.schema(EVENTS), False
+    schema = T.StructType(
+        [
+            T.StructField(f.name, T.LongType()) if f.name == "ts" else f
+            for f in EVENTS
+        ]
+    )
+    return (
+        reader.schema(schema).option(
+            "spark.sql.legacy.parquet.nanosAsLong", "true"
+        ),
+        True,
+    )
+
+
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events table, normalizing its timestamp representation.
 
     The testdata generator has shipped ``ts`` both as parquet INT64
     TIMESTAMP(NANOS) (unreadable as TimestampType; needs
     ``spark.sql.legacy.parquet.nanosAsLong``) and as plain microsecond
-    TIMESTAMP (read as TIMESTAMP_NTZ).  Branch on the physical type and
-    expose the same contract either way: ``ts_us`` (exact int64 micros —
-    use for ordering/gap arithmetic; µs matches what DuckDB's parquet
-    reader keeps, ``epoch_us(ts)``) and ``ts`` (microsecond TimestampType
-    for window functions; session tz is UTC so the instant is identical).
-
-    Conf scoping: the nanos branch does NOT mutate session conf.  SQL
-    confs passed as datasource ``.option(...)`` are merged into the scan's
-    hadoopConf (``newHadoopConfWithOptions``), so pairing an explicit
-    user schema (skips footer inference, which ignores options) with a
-    per-read ``nanosAsLong`` option scopes the legacy behavior to this one
-    relation — concurrent reads elsewhere in the session see no change."""
+    TIMESTAMP (read as TIMESTAMP_NTZ).  :func:`with_events_schema` picks
+    the branch from the footer on the driver, so the read launches no
+    Spark job and leaves the session conf alone, and either branch
+    exposes the same contract: ``ts_us`` (exact int64 micros — use for
+    ordering/gap arithmetic; µs matches what DuckDB's parquet reader
+    keeps, ``epoch_us(ts)``) and ``ts`` (microsecond TimestampType for
+    window functions; session tz is UTC so the instant is identical)."""
     path = os.path.join(sf_dir, "events.parquet")
-    try:
-        df = spark.read.parquet(path)
-        nanos = dict(df.dtypes)["ts"] in ("bigint", "long")
-    except Exception as exc:  # nanos file + conf unset → inference refuses
-        if "PARQUET_TYPE_ILLEGAL" not in str(exc):
-            raise
-        nanos = True
+    reader, nanos = with_events_schema(spark.read, path)
     if nanos:
-        df = (
-            spark.read.schema(
-                "event_id long, ts long, user_id long,"
-                " event_type string, value double, props string"
-            )
-            .option("spark.sql.legacy.parquet.nanosAsLong", "true")
-            .parquet(path)
-        )
         ts_us = F.expr("ts DIV 1000")
     else:
         ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return df.select(
+    return reader.parquet(path).select(
         "event_id",
         ts_us.alias("ts_us"),
         F.timestamp_micros(ts_us).alias("ts"),
@@ -672,8 +691,6 @@ def zorder_cluster_parquet(
 def file_minmax(out_dir: str, column: str) -> list[tuple[object, object]]:
     """Per-file (min, max) footer statistics for ``column`` — the zone
     map a clustered layout is graded on.  Pure metadata reads."""
-    import pyarrow.parquet as pq
-
     spans: list[tuple[object, object]] = []
     for root, _dirs, files in os.walk(out_dir):
         for f in sorted(files):

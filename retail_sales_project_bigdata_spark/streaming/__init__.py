@@ -15,13 +15,14 @@ path (append mode + late-data eviction).
 from __future__ import annotations
 
 import itertools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from retail_sales_project_bigdata_spark.functions import pround
 from retail_sales_project_bigdata_spark.plans import plan_facts
+from retail_sales_project_bigdata_spark.schemas import TESTDATA_SCHEMAS
 
 _counter = itertools.count()
 
@@ -49,44 +50,25 @@ def _capture_microbatch_facts(name: str, q) -> None:
         LAST_MICROBATCH_FACTS.pop(next(iter(LAST_MICROBATCH_FACTS)))
 
 # events.parquet has shipped ``ts`` both as INT64 TIMESTAMP(NANOS) — read
-# as raw nanos long (spark.sql.legacy.parquet.nanosAsLong) — and as plain
-# microsecond TIMESTAMP (read as TIMESTAMP_NTZ).  readStream needs an
-# explicit schema, so probe the footer via a batch read and branch.
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
+# as raw nanos long — and as plain microsecond TIMESTAMP (read as
+# TIMESTAMP_NTZ).  readStream needs an explicit schema:
+# ``sources.with_events_schema`` picks the branch from the footer on the
+# driver (no Spark job) and scopes ``nanosAsLong`` to this one source, so
+# the session conf is never touched.
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    import os
+    from retail_sales_project_bigdata_spark.sources import with_events_schema
 
-    batch_ts = dict(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet")).dtypes
-    )["ts"]
-    nanos_as_long = batch_ts in ("bigint", "long")
-    schema = _events_schema(
-        T.LongType() if nanos_as_long else T.TimestampNTZType()
+    reader, nanos = with_events_schema(
+        spark.readStream.option("pathGlobFilter", "events.parquet").option(
+            "maxFilesPerTrigger", 1
+        ),
+        os.path.join(sf_dir, "events.parquet"),
     )
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sf_dir)
-    )
-    if nanos_as_long:
+    if nanos:
         ts = F.timestamp_micros(F.expr("ts DIV 1000"))
     else:
         ts = F.col("ts").cast("timestamp")
-    return raw.select(
+    return reader.parquet(sf_dir).select(
         "event_id",
         ts.alias("ts"),
         "user_id",
@@ -478,7 +460,6 @@ def stream_cdc_upsert_parquet(
     shuffle, and the snapshot rewrite is the standard copy-on-write
     trade lakehouse MERGE makes.  Returns the started StreamingQuery.
     """
-    import os
 
     def merge_batch(df: DataFrame, batch_id: int) -> None:
         spark = df.sparkSession
@@ -563,7 +544,6 @@ def write_stream_idempotent_parquet(
 
     Returns the started StreamingQuery (caller drives + stops it).
     """
-    import os
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         target = os.path.join(out_dir, f"batch_id={batch_id}")
@@ -629,11 +609,8 @@ def streaming_corpus_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         STOPWORDS,
     )
 
-    schema = (
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TESTDATA_SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .option("maxFilesPerTrigger", 1)
         .parquet(sf_dir)
@@ -706,7 +683,6 @@ def streaming_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch ``ann_lsh_topk`` result — same buckets, same rounded-cosine
     ranking, same (desc cosine, asc neighbor) tie order.
     """
-    import os
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -728,11 +704,8 @@ def streaming_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
         )
     )
-    schema = spark.read.parquet(
-        os.path.join(sf_dir, "embeddings.parquet")
-    ).schema
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TESTDATA_SCHEMAS["embeddings"])
         .option("pathGlobFilter", "embeddings.parquet")
         .option("maxFilesPerTrigger", 1)
         .parquet(sf_dir)
@@ -836,11 +809,8 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from retail_sales_project_bigdata_spark.sources import read_table
 
-    schema = (
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TESTDATA_SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .option("maxFilesPerTrigger", 1)
         .parquet(sf_dir)
@@ -981,11 +951,8 @@ def streaming_incremental_near_dup(
         F.col("doc_id").alias("d_corpus"), F.col("shingles").alias("sh2")
     )
 
-    schema = (
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TESTDATA_SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .option("maxFilesPerTrigger", 1)
         .parquet(sf_dir)

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from retail_sales_project_bigdata_spark.schemas import TESTDATA_SCHEMAS
 from retail_sales_project_bigdata_spark.session import get_spark
@@ -36,7 +38,7 @@ def duck():
 def assert_oracle_match(spark_df, duck_con, sql: str) -> None:
     """Row-count + columns + order-insensitive value equality (the same
     comparison tools/oracle_check.py and the driver's gate perform)."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     from oracle_check import compare
 
     problems = compare(spark_df, duck_con.execute(sql).df(), "test")

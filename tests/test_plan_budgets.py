@@ -18,9 +18,9 @@ import sys
 
 import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import REPO, SF_SMALL
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 BUDGET_PATH = os.path.join(os.path.dirname(__file__), "plan_budgets.json")
 

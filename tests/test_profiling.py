@@ -20,6 +20,9 @@ def test_profile_query_fields(spark):
     assert prof["failed_tasks"] == 0
     assert prof["python_eval_nodes"] == 0  # rfm is fully relational
     assert prof["codegen_spans"] >= 1
+    # every read uses its declared schema: building rfm runs no job
+    assert prof["build_jobs"] == 0
+    assert prof["build_sec"] > 0
 
     with pytest.raises(KeyError):
         profile_query(spark, "no_such_query", SF_SMALL)
@@ -30,6 +33,16 @@ def test_profile_counts_python_stage(spark):
 
     prof = profile_query(spark, "ann_mmr_topk", SF_SMALL)
     assert prof["python_eval_nodes"] >= 1  # the applyInPandas rerank
+    assert prof["failed_tasks"] == 0
+
+
+def test_profile_counts_construction_jobs(spark):
+    """Jobs a builder runs before returning its DataFrame are counted:
+    the ANN brute-force builder collects its query block to the driver."""
+    from retail_sales_project_bigdata_spark.profiling import profile_query
+
+    prof = profile_query(spark, "ann_bruteforce_topk_numpy", SF_SMALL)
+    assert prof["build_jobs"] >= 1
     assert prof["failed_tasks"] == 0
 
 

@@ -35,6 +35,53 @@ def test_foreachbatch_sink_writes_all_rows(spark, tmp_path):
     ).first()[0]
 
 
+NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def test_events_stream_leaves_session_conf_unchanged(spark):
+    """Building the events stream must not set ``nanosAsLong`` on the
+    shared session: a micros file needs no legacy conf at all, and a
+    session-wide flag would leak into every later read."""
+    spark.conf.unset(NANOS_CONF)
+    _events_stream(spark, SF_SMALL)
+    assert spark.conf.get(NANOS_CONF, None) is None
+
+
+def test_events_stream_reads_nanos_file_per_read(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file streams through the per-read
+    option: exact micros come back and the session conf stays unset."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from retail_sales_project_bigdata_spark.streaming import _run_to_memory
+
+    sf_dir = str(tmp_path / "nanos_sf")
+    os.makedirs(sf_dir)
+    micros = np.array([1_000_001, 2_000_002, 3_000_003], dtype="int64")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], type=pa.int64()),
+                "ts": pa.array(micros * 1000, type=pa.timestamp("ns")),
+                "user_id": pa.array([10, 20, 30], type=pa.int64()),
+                "event_type": pa.array(["a", "b", "c"]),
+                "value": pa.array([1.0, 2.0, 3.0]),
+                "props": pa.array(["{}", "{}", "{}"]),
+            }
+        ),
+        os.path.join(sf_dir, "events.parquet"),
+    )
+    spark.conf.unset(NANOS_CONF)
+    stream = _events_stream(spark, sf_dir).select(
+        "event_id", F.unix_micros("ts").alias("ts_us")
+    )
+    name, _ = _run_to_memory(stream, "append")
+    got = spark.table(name).orderBy("event_id").collect()
+    assert [r.ts_us for r in got] == micros.tolist()
+    assert spark.conf.get(NANOS_CONF, None) is None
+
+
 def test_foreachbatch_sink_idempotent_on_replay(spark, tmp_path):
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = _start(spark, out, ckpt)

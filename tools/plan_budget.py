@@ -15,13 +15,15 @@ Usage: python tools/plan_budget.py [sf_dir]   (writes the JSON)
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from retail_sales_project_bigdata_spark.plans import plan_facts  # noqa: E402
 
-BUDGET_PATH = "/root/repo/tests/plan_budgets.json"
+BUDGET_PATH = os.path.join(REPO, "tests", "plan_budgets.json")
 
 # The plan_facts keys a budget locks down. Broadcast/sort-merge join
 # MIXES are left to `python -m retail_sales_project_bigdata_spark

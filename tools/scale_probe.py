@@ -20,10 +20,12 @@ full sweep that regenerates SCALING.md).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -31,10 +33,9 @@ SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"
 # key-offset copies with caesar'd text / sign-flipped embeddings so the
 # dedup and near-dup workloads grow 10x, not 100x).  Included when
 # present.
-_SF1 = "/root/repo/.scale/sf1"
-import os as _os  # noqa: E402
+_SF1 = os.path.join(REPO, ".scale", "sf1")
 
-if _os.path.isdir(_SF1):
+if os.path.isdir(_SF1):
     SFS.append(_SF1)
 
 # Shape-diverse probe set: scan-agg, multi-join, window, range join,
@@ -150,7 +151,7 @@ def main() -> None:
         results[name] = per_sf
 
     sf_labels = [
-        _os.path.basename(d.rstrip("/")).replace("sf", "sf ") for d in sfs
+        os.path.basename(d.rstrip("/")).replace("sf", "sf ") for d in sfs
     ]
     ratio_hdr = " | ".join(f"r{i + 1}" for i in range(len(sfs) - 1))
     out = [
@@ -256,7 +257,7 @@ def main() -> None:
         hdr_i = next(i for i, l in enumerate(out) if l.startswith("| query"))
         print("\n".join(out[hdr_i:hdr_i + 2 + len(probes)]))
         return
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote SCALING.md")
 

@@ -33,14 +33,16 @@ Usage: python tools/semdedup_pair_probe.py [sf_dir ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 DEFAULT_SFS = [
     "/root/testdata/sf0.1",
-    "/root/repo/.scale/sf1",
-    "/root/repo/.scale/sf10",
+    os.path.join(REPO, ".scale", "sf1"),
+    os.path.join(REPO, ".scale", "sf10"),
 ]
 
 
