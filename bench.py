@@ -18,6 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
+from retail_sales_project_bigdata_spark.registry import query_scope
 from retail_sales_project_bigdata_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -33,20 +34,6 @@ ML_TRAINING_QUERIES = {
     "segment_assignments",
     "churn_model_metrics",
     "fpgrowth_itemsets",
-}
-
-# Queries whose first execution pays a one-time memoized pipeline build
-# (BPE merge training, triangle enumeration, segmentation prep — the
-# ``*_CACHE`` dicts in registry.clear_session_memos).  They are always
-# warm-re-timed, and their (cold - warm) delta is reported separately as
-# ``pipeline_build_s`` instead of being smeared into per-query numbers.
-MEMO_TRAINER_QUERIES = {
-    "bpe_train_merges",
-    "bpe_encode_stats",
-    "triangle_counts",
-    "clustering_coefficients",
-    "kmeans_sweep",
-    "segment_assignments",
 }
 
 
@@ -107,7 +94,7 @@ def main() -> None:
     # IDENTICAL code (scheduler/GC noise), so one cold pass is NOT
     # representative.  Each full run is therefore: (1) a cold pass over
     # every query, then (2) a warm RE-TIME of (a) the slowest RETIME_TOP
-    # queries plus every memoized trainer, and (b) — new in r7, closing
+    # queries, and (b) — new in r7, closing
     # VERDICT r6 item 6 — EVERY remaining query whose cold time >=
     # RETIME_MIN_S, cheapest-first under an explicit time budget:
     # BENCH_r06 showed a ~+2s fixed per-query spike inflating dozens of
@@ -119,8 +106,7 @@ def main() -> None:
     # estimator, robust to additive noise.  Any >= RETIME_MIN_S query
     # the budget could not reach is listed in ``retime_skipped`` so the
     # artifact self-documents which values may still carry cold-pass
-    # noise.  The memoized trainers' (cold - warm) build delta is
-    # surfaced as ``pipeline_build_s`` rather than hidden or smeared.
+    # noise.
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "1")))
     retime_top = int(os.environ.get("SPARK_GRAFT_BENCH_RETIME_TOP", "48"))
     retime_min = float(
@@ -142,24 +128,19 @@ def main() -> None:
         )
     )
     per_run: list[dict[str, float]] = []
-    per_run_build: list[float] = []
-    per_run_build_q: list[dict[str, float]] = []
     cold_last: dict[str, float] = {}
     warm_last: dict[str, float] = {}
     skipped_last: list[str] = []
     for _ in range(n_runs):
 
         def timed(name: str) -> float:
-            t0 = time.perf_counter()
-            materialize(queries[name](spark, SF_DIR))
-            dt = round(time.perf_counter() - t0, 3)
-            # Queries persist multi-consumer frames for WITHIN-action
-            # reuse; nothing is shared ACROSS queries, so dropping the
-            # cache here bounds executor memory over the 200+-query set
-            # (accumulated persists previously drove multi-pass runs
-            # into GCLocker death at sf0.1).
-            spark.catalog.clearCache()
-            return dt
+            # The scope releases what the query persisted, so executor
+            # memory stays bounded over the 200+-query set.  Its release
+            # runs outside the timed span.
+            with query_scope(spark):
+                t0 = time.perf_counter()
+                materialize(queries[name](spark, SF_DIR))
+                return round(time.perf_counter() - t0, 3)
 
         cold = {name: timed(name) for name in sorted(queries)}
         slowest = [
@@ -167,11 +148,8 @@ def main() -> None:
             for n, t in sorted(cold.items(), key=lambda kv: -kv[1])
             if t >= retime_min
         ][:retime_top]
-        retime = sorted(
-            set(slowest) | (MEMO_TRAINER_QUERIES & set(cold))
-        )
         warm_python_workers(spark)  # see docstring: refork != query cost
-        warm = {name: timed(name) for name in retime}
+        warm = {name: timed(name) for name in sorted(slowest)}
         # Budgeted sweep over everything else >= retime_min, cheapest
         # cold time first (see protocol comment above).
         extra = sorted(
@@ -191,23 +169,8 @@ def main() -> None:
         final = {
             n: min(cold[n], warm.get(n, cold[n])) for n in cold
         }
-        build_per_q = {
-            n: round(max(0.0, cold[n] - warm[n]), 3)
-            for n in warm
-            if n in MEMO_TRAINER_QUERIES
-        }
         per_run.append(final)
-        per_run_build.append(round(sum(build_per_q.values()), 3))
-        per_run_build_q.append(build_per_q)
         cold_last, warm_last, skipped_last = cold, warm, skipped
-        # Memo sharing between the queries of ONE run is engine design
-        # (bpe pair, triangle pair, segmentation sweep); carrying memos
-        # into the NEXT run would report cache-hit times as medians.
-        from retail_sales_project_bigdata_spark.registry import (
-            clear_session_memos,
-        )
-
-        clear_session_memos()
 
     def median(xs: list[float]) -> float:
         s = sorted(xs)
@@ -228,20 +191,6 @@ def main() -> None:
         "sf": float(sf) if sf else None,
         "runs": n_runs,
         "run_totals": totals,
-        "pipeline_build_s": round(median(per_run_build), 3),
-        # Per-query build delta (cold - warm) for each memoized trainer:
-        # their headline ``queries`` value is the warm (memo-hit) time by
-        # protocol design, so THIS map carries the real per-query build
-        # cost instead of leaving it smeared into one aggregate — a
-        # reader sees warm + build side by side per trainer.
-        "trainer_build_s": {
-            n: round(
-                median([r.get(n, 0.0) for r in per_run_build_q]), 3
-            )
-            for n in sorted(
-                set().union(*per_run_build_q) if per_run_build_q else set()
-            )
-        },
         "cold_pass": cold_last,
         "warm_retimed": warm_last,
         # >= retime_min queries the warm-retime budget could not reach:
@@ -250,13 +199,12 @@ def main() -> None:
         "retime_skipped": sorted(skipped_last),
         "protocol": (
             f"{n_runs} full run(s): cold pass over all queries, then warm "
-            f"re-time of the slowest {retime_top} plus all memoized "
-            f"trainers, then every remaining query >= {retime_min}s "
-            f"cheapest-first within a {retime_budget}s budget; per-query "
-            "value = min(cold, warm) (timeit-style lower bound); "
-            "retime_skipped lists >= threshold queries the budget missed "
-            "(cold-only values); pipeline_build_s = memoized trainer "
-            "build cost (cold - warm), excluded from the total; noop "
+            f"re-time of the slowest {retime_top}, then every remaining "
+            f"query >= {retime_min}s cheapest-first within a "
+            f"{retime_budget}s budget; per-query value = min(cold, warm) "
+            "(timeit-style lower bound); retime_skipped lists >= "
+            "threshold queries the budget missed (cold-only values); "
+            "each query built and run in its own query_scope; noop "
             "sink, warmed JVM; medians across runs"
         ),
     }

@@ -13,6 +13,8 @@ modes).  The rebuild exposes one argparse CLI:
 
 Each job builds its plan through the operators package and writes/prints
 results — the same code paths the driver contract exercises.
+Every job runs inside one ``registry.query_scope``, which releases what
+the job persisted.
 """
 
 from __future__ import annotations
@@ -107,14 +109,19 @@ def main(argv: list[str] | None = None) -> int:
             print(name)
         return 0
 
+    from retail_sales_project_bigdata_spark.registry import query_scope
     from retail_sales_project_bigdata_spark.session import get_spark
 
     spark = get_spark(
         f"cli_{args.job}",
         master=f"local[{args.cpus}]" if args.cpus else None,
     )
-    sf = args.sf_dir
+    with query_scope(spark):
+        return _run_job(args, spark)
 
+
+def _run_job(args: argparse.Namespace, spark) -> int:
+    sf = args.sf_dir
     if args.job == "preprocess":
         from retail_sales_project_bigdata_spark.operators.pipeline import (
             run_preprocessing_pipeline,

@@ -31,17 +31,6 @@ from pyspark.sql import functions as F
 # day 1 == 1995-01-01, matching the reference's 1-based `day` column).
 DAY_EPOCH = "1995-01-01"
 
-def session_key(spark, *parts) -> tuple:
-    """Memo key for per-(session, ...) ``*_CACHE`` dicts: a weakref.ref
-    to the session plus the given parts.  NOT ``id(spark)`` — a dead ref
-    never equals a fresh session's ref, so a recycled id() can never
-    serve cached state bound to a stopped SparkContext, while the memo
-    stays a plain dict that ``registry.clear_session_memos`` clears
-    between benchmark runs."""
-    import weakref
-
-    return (weakref.ref(spark), *parts)
-
 
 def pround(col: Column | str, scale: int) -> Column:
     """Portable double rounding — bit-identical to DuckDB's ROUND(double).

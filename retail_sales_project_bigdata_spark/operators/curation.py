@@ -39,7 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from retail_sales_project_bigdata_spark.functions import session_key
 from retail_sales_project_bigdata_spark.operators.datasetops import (
     _DOC_HASH_SQL,
     _doc_hash,
@@ -316,17 +315,6 @@ def _apply_merge(syms, a: str, b: str, merged_sym: str):
     )
 
 
-# Memoized per (session, sf_dir), the _SWEEP_CACHE pattern: the trainer
-# and the encoder are separate gate queries that share the SAME K-round
-# training loop; without the memo each pays it in full.  The final vocab
-# is localCheckpoint'ed (block-manager storage, eager): it survives the
-# bench/gate per-query clearCache AND truncates the K-round lineage, so
-# a later consumer can never silently replay the whole loop.
-_MERGES_CACHE: dict[
-    tuple[int, str], tuple[list[tuple[int, str, str, str, int]], DataFrame]
-] = {}
-
-
 def _learn_merges(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
@@ -340,15 +328,10 @@ def _learn_merges(
     of every multi-symbol distinct word (so corpus encoding is a join,
     not a re-application of the merge chain).
     """
-    key = session_key(spark, sf_dir, bpe_train_max_docs())
-    hit = _MERGES_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = fan_out(read_table(spark, sf_dir, "documents"))
     # Deterministic trainer-corpus cap (see bpe_train_max_docs): past the
     # cap, train on every step-th doc_id.  The count is one cheap
-    # column-less scan, paid once per (session, sf_dir) thanks to the
-    # memo; step == 1 (no-op) at every driver testdata SF.
+    # column-less scan; step == 1 (no-op) at every testdata SF.
     cap = bpe_train_max_docs()
     n_docs = docs.count()
     step = max(1, -(-n_docs // cap))  # ceil div
@@ -414,9 +397,7 @@ def _learn_merges(
         raise
     final_vocab = cur.localCheckpoint(eager=True)
     cur.unpersist()
-    result = (merges, final_vocab)
-    _MERGES_CACHE[key] = result
-    return result
+    return merges, final_vocab
 
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,8 +520,8 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # final_vocab is a localCheckpoint (see _learn_merges): lineage is
     # truncated, so the returned lazy plan can never replay the K-round
-    # merge loop, and the blocks survive the gate's per-query cache
-    # clears for the session-scoped memo.
+    # merge loop.  Its blocks live until the caller's
+    # registry.query_scope closes.
     return out
 
 

@@ -29,10 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from retail_sales_project_bigdata_spark.functions import (
-    copair_explode,
-    session_key,
-)
+from retail_sales_project_bigdata_spark.functions import copair_explode
 from retail_sales_project_bigdata_spark.sources import read_table
 
 DAMPING = 0.85
@@ -177,42 +174,25 @@ def triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(TRIANGLE_TOP_N)
 
 
-# Memoized per (session, sf_dir), the _SWEEP_CACHE pattern: both graph
-# queries run the same edge-build + enumeration; the two result frames
-# are node-sized, localCheckpoint'ed (lineage truncated, survives the
-# gate's per-query cache clears) so the second query reads them instead
-# of re-deriving the pair self-join.  Keys hold a weakref.ref to the
-# session, NOT id(spark): a dead ref never equals a fresh session's
-# ref, so a recycled id() cannot serve a frame bound to a stopped
-# context (the multimodal.py hazard) — while the memo stays a plain
-# ``*_CACHE`` dict that registry.clear_session_memos clears between
-# benchmark runs.
-_TRI_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _triangle_pipeline(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(degree frame (node, dg), per-node triangle counts (l_partkey,
     n_triangles)) — the shared core of ``triangle_counts`` and
     ``clustering_coefficients``; see ``triangle_counts`` for the
-    algorithm and scale notes.  Materializes via eager localCheckpoint
-    and memoizes; plan tests use :func:`triangle_pipeline_frames`, whose
-    lazy output still SHOWS the join strategy (a checkpointed frame
-    plans as ``Scan ExistingRDD``)."""
-    key = session_key(spark, sf_dir)
-    hit = _TRI_CACHE.get(key)
-    if hit is not None:
-        return hit
+    algorithm and scale notes.  Both frames are node-sized and
+    materialized via eager localCheckpoint, so the persisted oriented
+    edge frame is released before returning; plan tests use
+    :func:`triangle_pipeline_frames`, whose lazy output still SHOWS the
+    join strategy (a checkpointed frame plans as ``Scan ExistingRDD``)."""
     deg, per_node, oriented = _triangle_frames_from(
-        _copurchase_edges_memo(spark, sf_dir), _persist=True
+        _checkpointed_edges(spark, sf_dir), _persist=True
     )
     result = (
         deg.localCheckpoint(eager=True),
         per_node.localCheckpoint(eager=True),
     )
     oriented.unpersist()
-    _TRI_CACHE[key] = result
     return result
 
 
@@ -265,7 +245,7 @@ def triangle_pipeline_frames(
     spark: SparkSession, sf_dir: str, _persist: bool = False
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Lazy (deg, per_node, oriented) triangle-pipeline frames — no
-    checkpoint, no memo.  ``_persist`` marks the oriented edge frame for
+    checkpoint.  ``_persist`` marks the oriented edge frame for
     storage (the materializing caller's spill-safety; plan tests leave
     it off so the physical plan shows the joins, not InMemoryTableScan)."""
     return _triangle_frames_from(
@@ -273,24 +253,12 @@ def triangle_pipeline_frames(
     )
 
 
-# Edge-set memo shared by the exact pipeline and the Doulion twin: both
-# start from the same distinct co-purchase edges, and the pair explosion
-# + distinct is the dominant LINEAR cost — without sharing, the sampled
-# twin re-paid it (plus a second pass for its |E| count).  Same
-# localCheckpoint + *_CACHE lifecycle and weakref keying as _TRI_CACHE
-# (cleared between bench runs; RDD released by GC when the entry drops).
-_TRI_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _copurchase_edges_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = session_key(spark, sf_dir)
-    hit = _TRI_EDGE_CACHE.get(key)
-    if hit is None:
-        hit = _copurchase_int_edges(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-        _TRI_EDGE_CACHE[key] = hit
-    return hit
+def _checkpointed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct co-purchase edges, materialized once: the degree
+    aggregate and the oriented join (exact pipeline), or the |E| count
+    and the sampled enumeration (Doulion twin), all read it, and the
+    pair explosion + distinct is the dominant LINEAR cost."""
+    return _copurchase_int_edges(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def _triangle_frames_from(
@@ -471,11 +439,7 @@ def triangle_counts_sampled(
     ``divisor`` overrides the derivation (tests pin D=1 to assert exact
     equality with :func:`triangle_counts`, and larger D for the error
     envelope)."""
-    # checkpointed edge memo shared with the exact twin: the |E| count
-    # and the sampled enumeration both read the materialized edge set,
-    # so the linear pair-explosion cost is paid once per (session, SF)
-    # across both queries
-    edges = _copurchase_edges_memo(spark, sf_dir)
+    edges = _checkpointed_edges(spark, sf_dir)
     if divisor is None:
         divisor = max(1, edges.count() // TRIANGLE_SAMPLE_TARGET_EDGES)
     kept = edges.filter(_edge_keep_hash() % F.lit(divisor) == 0)

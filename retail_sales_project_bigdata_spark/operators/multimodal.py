@@ -81,11 +81,12 @@ def _media_session(spark: SparkSession, modality: str = "*") -> SparkSession:
 # the all-modality average would undershoot the image path's target).
 # A WeakKeyDictionary on the CLONE session object (not ``id(clone)``):
 # entries evict with their session, so a recycled id() can never serve a
-# batch size computed for dead-session state.  Deliberately NOT a plain
-# ``*_CACHE`` dict, so ``registry.clear_session_memos`` leaves it alone:
-# the memo is a measurement of the table (avg payload bytes), not
-# pipeline state — re-probing it between benchmark runs would charge the
-# sizing job to whichever media query runs first in every run.
+# batch size computed for dead-session state.  This and _MEDIA_SESSIONS
+# are the only cross-query memos the package keeps: both hold plain
+# values (an int, session clones) and no Spark storage, so
+# registry.query_scope has nothing of theirs to release, and dropping
+# them would put the sizing job back on every media query (resize_media
+# is a benchmarked op).
 _ARROW_ROWS_CACHE: (
     "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], int]]"
 ) = weakref.WeakKeyDictionary()

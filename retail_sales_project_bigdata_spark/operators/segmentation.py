@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from retail_sales_project_bigdata_spark.functions import (
-    session_key,
     net_sales,
     oracle_avg,
     oracle_sum,
@@ -106,23 +105,13 @@ def segmentation_features_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Memoized per (session, sf_dir) like the sweep below: the manual-row
-# path calls this directly AND (via _run_sweep -> _scaled_features)
-# indirectly; without the cache a fresh session would pay the full
-# feature aggregation + scaler fit twice per manual prediction.
-_PREP_CACHE: dict[tuple[int, str], tuple[object, object, DataFrame]] = {}
-
-
 def _fit_feature_prep(spark: SparkSession, sf_dir: str):
     """(assembler, fitted scaler, assembled corpus frame): the shared
     feature-prep pipeline (SegmentationModel.java:84-88 — std only, no
-    mean centering).  Factored out so the manual-row scoring path scores
-    against the SAME fitted scaler as the corpus (the reference's manual
-    mode re-derives it identically, SegmentationPrediction.java:74-87)."""
-    key = session_key(spark, sf_dir)
-    hit = _PREP_CACHE.get(key)
-    if hit is not None:
-        return hit
+    mean centering).  The sweep returns it, so assignments and the
+    manual-row path score against the SAME fitted scaler as the corpus
+    (the reference's manual mode re-derives it identically,
+    SegmentationPrediction.java:74-87) without fitting it twice."""
     from pyspark.ml.feature import StandardScaler, VectorAssembler
 
     feats = segmentation_features(spark, sf_dir).na.fill(0.0, FEATURE_COLS)
@@ -136,34 +125,24 @@ def _fit_feature_prep(spark: SparkSession, sf_dir: str):
         withStd=True,
         withMean=False,
     ).fit(assembled)
-    result = (assembler, scaler, assembled)
-    _PREP_CACHE[key] = result
-    return result
+    return assembler, scaler, assembled
 
 
-def _scaled_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _scaled_features(prep) -> DataFrame:
     """(custkey, features): assembled + standard-scaled feature frame."""
-    _, scaler, assembled = _fit_feature_prep(spark, sf_dir)
+    _, scaler, assembled = prep
     return scaler.transform(assembled).select("custkey", "features")
 
 
-# The sweep is deterministic (seeded KMeans on a deterministic frame), so
-# its result — metric rows, the selected k, and the best fitted model —
-# is memoized per (session, sf_dir).  kmeans_sweep and segment_assignments
-# share ONE sweep instead of each paying the full grid (ADVICE r1 fix:
-# assignments previously re-ran the sweep just to read best_k, then refit).
-_SWEEP_CACHE: dict[tuple[int, str], tuple[list, int, object]] = {}
-
-
 def _run_sweep(spark: SparkSession, sf_dir: str):
-    key = session_key(spark, sf_dir)
-    hit = _SWEEP_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """(metric rows, best k, best fitted model, feature prep): the seeded
+    KMeans grid over one fitted feature prep.  Callers that score reuse
+    the returned prep and model instead of fitting either again."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.evaluation import ClusteringEvaluator
 
-    scaled = _scaled_features(spark, sf_dir).cache()
+    prep = _fit_feature_prep(spark, sf_dir)
+    scaled = _scaled_features(prep).cache()
     try:
         evaluator = ClusteringEvaluator(metricName="silhouette")
         rows, models = [], {}
@@ -190,9 +169,7 @@ def _run_sweep(spark: SparkSession, sf_dir: str):
     )
 
     strip_training_summary(models[best_k])
-    result = (rows, best_k, models[best_k])
-    _SWEEP_CACHE[key] = result
-    return result
+    return rows, best_k, models[best_k], prep
 
 
 def kmeans_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,7 +181,7 @@ def kmeans_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (metric values are engine/version-sensitive; schema + row count + value
     ranges are asserted in tests).
     """
-    rows, best_k, _ = _run_sweep(spark, sf_dir)
+    rows, best_k, _, _ = _run_sweep(spark, sf_dir)
     return spark.createDataFrame(
         [(k, s, w, 1 if k == best_k else 0) for k, s, w in rows],
         "k int, silhouette double, wssse double, is_best int",
@@ -220,9 +197,8 @@ def segment_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scores with the MODEL the sweep actually fitted (M5 → M6 contract:
     the published metrics and the assignments describe the SAME
     segmentation) — no second sweep, no refit."""
-    _, _, model = _run_sweep(spark, sf_dir)
-    scaled = _scaled_features(spark, sf_dir)
-    return model.transform(scaled).select(
+    _, _, model, prep = _run_sweep(spark, sf_dir)
+    return model.transform(_scaled_features(prep)).select(
         "custkey", F.col("prediction").alias("cluster")
     )
 
@@ -242,13 +218,12 @@ def score_manual_row(
             f"manual scoring needs {len(FEATURE_COLS)} values "
             f"({', '.join(FEATURE_COLS)}); got {len(values)}"
         )
-    assembler, scaler, _ = _fit_feature_prep(spark, sf_dir)
+    _, _, model, (assembler, scaler, _) = _run_sweep(spark, sf_dir)
     row = spark.createDataFrame(
         [tuple(float(v) for v in values)],
         ", ".join(f"{c} double" for c in FEATURE_COLS),
     )
     scaled = scaler.transform(assembler.transform(row))
-    _, _, model = _run_sweep(spark, sf_dir)
     return model.transform(scaled).select(
         F.col("prediction").alias("cluster")
     )

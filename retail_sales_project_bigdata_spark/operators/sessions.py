@@ -514,11 +514,9 @@ def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.hll_sketch_agg("user_id", F.lit(HLL_LG_K)).alias("sk"))
         # three consumers (expansion, day dimension, 1d estimates):
         # persist the day-count-sized sketch frame so the corpus is
-        # scanned ONCE, not once per consumer.  Released by the caller's
-        # per-query ``spark.catalog.clearCache()`` (bench.py /
-        # tools/oracle_check.py), same contract as the other persisting
-        # lazy queries (reports.py, stats.py) — the result is returned
-        # lazily, so unpersisting here would re-scan the corpus thrice.
+        # scanned ONCE, not once per consumer.  The result is returned
+        # lazily, so unpersisting here would re-scan the corpus thrice;
+        # the caller's registry.query_scope releases it after the action.
         .persist()
     )
     days = day_sk.select("day")

@@ -287,10 +287,8 @@ def _weekly_spine(
     partitionings — ReuseExchange cannot share the scan+aggregate, so
     without the cache boundary the full rollup runs twice (measured ~2x
     per query).  Post-aggregation rows keep the cache small at any input
-    scale; no unpersist by design — CacheManager dedupes identical
-    plans, so both variants and repeated calls pin ONE entry per sf_dir.
-    Sharing ONE helper also guarantees the sibling plans stay identical,
-    which is what makes that dedup apply.
+    scale.  The returned frames are lazy, so the caller's
+    ``registry.query_scope`` releases the entry after the action.
     """
     li = (
         read_table(spark, sf_dir, "lineitem")

@@ -86,8 +86,12 @@ def profile_query(
     The builder also runs under its own job group, so ``build_sec`` and
     ``build_jobs`` report the construction layer: every Spark job a
     builder runs before it returns its DataFrame (convergence loops, ML
-    fits, deliberate ``collect()``s)."""
-    from retail_sales_project_bigdata_spark.registry import queries
+    fits, deliberate ``collect()``s).  Building and executing share one
+    ``registry.query_scope``, so the query leaves nothing persisted."""
+    from retail_sales_project_bigdata_spark.registry import (
+        queries,
+        query_scope,
+    )
 
     qs = queries()
     if name not in qs:
@@ -95,11 +99,14 @@ def profile_query(
             f"unknown query {name!r}; see `python -m "
             "retail_sales_project_bigdata_spark list`"
         )
-    df, build_wall, build_jobs = _in_job_group(
-        spark.sparkContext, f"{name}-build", lambda: qs[name](spark, sf_dir)
-    )
-    return {
-        **profile_df(df, label=name),
-        "build_sec": round(build_wall, 3),
-        "build_jobs": len(build_jobs),
-    }
+    with query_scope(spark):
+        df, build_wall, build_jobs = _in_job_group(
+            spark.sparkContext,
+            f"{name}-build",
+            lambda: qs[name](spark, sf_dir),
+        )
+        return {
+            **profile_df(df, label=name),
+            "build_sec": round(build_wall, 3),
+            "build_jobs": len(build_jobs),
+        }

@@ -12,7 +12,8 @@ seeded LSH/IVF/PQ variants, iterative/streaming state).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -128,14 +129,55 @@ def oracle_sql() -> dict[str, str]:
 
 
 def clear_session_memos() -> None:
-    """Drop every module-level per-(session, sf_dir) memo (the
-    ``_*_CACHE`` dicts: BPE training, triangle pipeline, segmentation
-    prep/sweep).  Sharing a memo BETWEEN the queries of one logical run
-    is intended engine behavior; carrying it ACROSS repeated benchmark
-    runs in one process is not — ``bench.py`` calls this between full-set
-    runs so each run's per-query times reflect cold pipelines, and the
-    ML tests use it for isolation."""
-    for mod in _MODULES:
-        for attr, val in vars(mod).items():
-            if attr.endswith("_CACHE") and isinstance(val, dict):
-                val.clear()
+    """No-op kept for callers outside the package (the benchmark harness
+    calls it between passes).  No query keeps state from one query to
+    the next any more: what a query persists is released by
+    :func:`query_scope`, so there is no memo left to clear."""
+
+
+def _cache_entries(cache_manager) -> list:
+    """The session's ``CachedData`` entries.  ``CacheManager`` exposes
+    only their count, so the private field is read by reflection."""
+    field = cache_manager.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cache_manager)
+    return [entries.apply(i) for i in range(entries.size())]
+
+
+@contextmanager
+def query_scope(spark: SparkSession) -> Iterator[None]:
+    """Release every cache entry and persisted RDD created inside.
+
+    Builders persist and localCheckpoint the frames their returned
+    DataFrame reads, so only the caller that builds AND acts can free
+    them::
+
+        with registry.query_scope(spark):
+            df = queries()[name](spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+
+    On exit, also when the body raises, every ``CacheManager`` entry and
+    every persistent RDD that did not exist when the scope opened is
+    dropped.  What existed before stays, including the buffers a
+    pre-existing cache entry first fills inside the scope.  Do not read
+    a frame built inside after the scope closes: its cached and
+    checkpointed inputs are gone."""
+    jsession = spark._jsparkSession
+    cache_manager = jsession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+    entries_before = set(_cache_entries(cache_manager))
+    rdds_before = set(jsc.getPersistentRDDs().keySet())
+    try:
+        yield
+    finally:
+        for entry in _cache_entries(cache_manager):
+            if entry not in entries_before:
+                cache_manager.uncacheQuery(jsession, entry.plan(), False, False)
+        keep = set(rdds_before)
+        for entry in _cache_entries(cache_manager):
+            builder = entry.cachedRepresentation().cacheBuilder()
+            if builder.isCachedColumnBuffersLoaded():
+                keep.add(builder.cachedColumnBuffers().id())
+        persistent = jsc.getPersistentRDDs()  # a snapshot map
+        for rdd_id in set(persistent.keySet()) - keep:
+            persistent.get(rdd_id).unpersist(False)

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -43,3 +44,30 @@ def assert_oracle_match(spark_df, duck_con, sql: str) -> None:
 
     problems = compare(spark_df, duck_con.execute(sql).df(), "test")
     assert not problems, problems
+
+
+def persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def cache_entry_count(spark) -> int:
+    return (
+        spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    )
+
+
+@contextmanager
+def released_scope(spark):
+    """Run the body in ``registry.query_scope`` and assert that it left
+    no persistent RDD and no cache entry behind.  RDDs are compared as
+    id sets, not counts: the ContextCleaner may drop older RDDs while
+    the body runs."""
+    from retail_sales_project_bigdata_spark.registry import query_scope
+
+    rdds_before = persistent_rdd_ids(spark)
+    entries_before = cache_entry_count(spark)
+    with query_scope(spark):
+        yield
+    left = persistent_rdd_ids(spark) - rdds_before
+    assert not left, f"persistent RDDs created inside and left: {sorted(left)}"
+    assert cache_entry_count(spark) == entries_before

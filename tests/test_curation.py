@@ -231,9 +231,6 @@ def test_bpe_capped_trainer_out_of_sample_encode(spark, monkeypatch, tmp_path):
         bpe_encode_stats,
         bpe_train_merges,
     )
-    from retail_sales_project_bigdata_spark.registry import (
-        clear_session_memos,
-    )
 
     # 10 docs, cap 5 → step 2 → the trainer sees even doc_ids only.
     # Odd docs carry words ("inter", "estim") built from the merges the
@@ -256,7 +253,6 @@ def test_bpe_capped_trainer_out_of_sample_encode(spark, monkeypatch, tmp_path):
     sf_dir = str(tmp_path)
 
     monkeypatch.setenv("SPARK_GRAFT_BPE_MAX_DOCS", "5")
-    clear_session_memos()
     try:
         got_merges = [
             tuple(r) for r in bpe_train_merges(spark, sf_dir).collect()
@@ -267,7 +263,6 @@ def test_bpe_capped_trainer_out_of_sample_encode(spark, monkeypatch, tmp_path):
         }
     finally:
         monkeypatch.delenv("SPARK_GRAFT_BPE_MAX_DOCS")
-        clear_session_memos()
 
     sample_counts = collections.Counter(
         w for i, text, *_ in docs if i % 2 == 0 for w in text.split(" ")

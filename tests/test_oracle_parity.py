@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_SMALL, assert_oracle_match
+from tests.conftest import SF_SMALL, assert_oracle_match, released_scope
 
 _QUERIES = entrymod.queries()
 _ORACLES = entrymod.oracle_sql()
@@ -18,8 +18,9 @@ _ORACLES = entrymod.oracle_sql()
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_oracle_parity(spark, duck, name):
     assert name in _QUERIES, f"oracle_sql has {name} but queries() doesn't"
-    sdf = _QUERIES[name](spark, SF_SMALL)
-    assert_oracle_match(sdf, duck, _ORACLES[name])
+    with released_scope(spark):
+        sdf = _QUERIES[name](spark, SF_SMALL)
+        assert_oracle_match(sdf, duck, _ORACLES[name])
 
 
 @pytest.mark.parametrize("name", sorted(_QUERIES))
@@ -33,23 +34,28 @@ def test_query_runs(spark, name):
     only — serialize arrays with ``array_join`` (DuckDB mirror
     ``array_to_string``) or explode;
     keep typed-array forms as non-registered library functions (e.g.
-    ``embedding_quantize_int8_vectors``)."""
+    ``embedding_quantize_int8_vectors``).
+
+    Built and run inside ``registry.query_scope``: the query must leave
+    no persistent RDD and no cache entry behind."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    df = _QUERIES[name](spark, SF_SMALL)
-    assert df.columns
-    complex_cols = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
-    assert not complex_cols, (
-        f"{name} returns complex-typed top-level column(s) {complex_cols}:"
-        " the driver gate cannot canonicalize list/struct cells —"
-        " serialize them (array_join / to_json) in the registered query"
-        " and keep the typed form as a library function"
-    )
-    df.limit(5).collect()
+    with released_scope(spark):
+        df = _QUERIES[name](spark, SF_SMALL)
+        assert df.columns
+        complex_cols = [
+            f.name
+            for f in df.schema.fields
+            if isinstance(f.dataType, (ArrayType, MapType, StructType))
+        ]
+        assert not complex_cols, (
+            f"{name} returns complex-typed top-level column(s)"
+            f" {complex_cols}: the correctness gate cannot canonicalize"
+            " list/struct cells — serialize them (array_join / to_json)"
+            " in the registered query and keep the typed form as a"
+            " library function"
+        )
+        df.limit(5).collect()
 
 
 def test_entry_smoke(spark):

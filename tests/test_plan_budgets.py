@@ -27,7 +27,10 @@ BUDGET_PATH = os.path.join(os.path.dirname(__file__), "plan_budgets.json")
 
 def test_headline_plans_within_budget(spark):
     from retail_sales_project_bigdata_spark.plans import plan_facts
-    from retail_sales_project_bigdata_spark.registry import queries
+    from retail_sales_project_bigdata_spark.registry import (
+        queries,
+        query_scope,
+    )
 
     with open(BUDGET_PATH) as f:
         budgets = json.load(f)
@@ -41,16 +44,11 @@ def test_headline_plans_within_budget(spark):
     )
 
     # Hermetic environment, matching tools/plan_budget.py's fresh
-    # session: earlier suite tests leave SQL caches and pipeline memos
-    # behind, and a cached subtree plans as InMemoryTableScan (or a
-    # memoized checkpoint as Scan ExistingRDD) — different exchange
-    # counts than the checked-in budgets.
-    from retail_sales_project_bigdata_spark.registry import (
-        clear_session_memos,
-    )
-
+    # session: earlier suite tests that call builders outside a scope
+    # leave SQL caches behind, and a cached subtree plans as
+    # InMemoryTableScan — different exchange counts than the checked-in
+    # budgets.
     spark.catalog.clearCache()
-    clear_session_memos()
 
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -58,11 +56,11 @@ def test_headline_plans_within_budget(spark):
         qs = queries()
         over: list[str] = []
         for name, budget in sorted(budgets.items()):
-            # per-query hygiene, mirroring tools/plan_budget.py: a query
+            # one scope per query, as in tools/plan_budget.py: a query
             # that persists at build time must not leave cached subtrees
             # that re-plan later queries as InMemoryTableScan.
-            spark.catalog.clearCache()
-            s = plan_facts(qs[name](spark, SF_SMALL))
+            with query_scope(spark):
+                s = plan_facts(qs[name](spark, SF_SMALL))
             for key, cap in budget.items():
                 if s[key] > cap:
                     over.append(f"{name}.{key}: {s[key]} > budget {cap}")

@@ -303,8 +303,8 @@ def test_expectations_plans(spark):
 def test_triangle_counts_plan(spark):
     """Triangle counting must broadcast the degree dim and never plan a
     cartesian; everything stays JVM-side.  Asserted on the LAZY pipeline
-    frames — the query entry itself returns a memoized localCheckpoint
-    whose plan is an opaque `Scan ExistingRDD`."""
+    frames — the query entry itself reads a localCheckpoint whose plan
+    is an opaque `Scan ExistingRDD`."""
     from retail_sales_project_bigdata_spark.operators.graph import (
         triangle_pipeline_frames,
     )

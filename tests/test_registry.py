@@ -1,6 +1,6 @@
 """The registry merges every operator module's QUERIES/ORACLES and
 fails loudly on a name two modules both register, or on an oracle
-with no query."""
+with no query; ``query_scope`` releases what its body persisted."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ import types
 import pytest
 
 from retail_sales_project_bigdata_spark import registry
+from tests.conftest import cache_entry_count, persistent_rdd_ids
 
 
 def _module(name: str, queries=(), oracles=()) -> types.ModuleType:
@@ -64,3 +65,43 @@ def test_oracle_without_query_is_loud(monkeypatch):
     _install(monkeypatch, _module("mod_a", ["q1"], ["q1", "q9"]))
     with pytest.raises(RuntimeError, match=r"no registered query.*'q9'"):
         registry.oracle_sql()
+
+
+def test_query_scope_releases_when_the_action_raises(spark):
+    from pyspark.sql import functions as F
+
+    rdds_before = persistent_rdd_ids(spark)
+    entries_before = cache_entry_count(spark)
+    raised = []
+    with pytest.raises(Exception, match="scope-boom") as info:
+        with registry.query_scope(spark):
+            cached = spark.range(40).selectExpr("id * 3 AS v").cache()
+            cached.count()
+            spark.range(20).localCheckpoint(eager=True)
+            assert persistent_rdd_ids(spark) - rdds_before
+            try:
+                cached.select(F.raise_error(F.lit("scope-boom"))).collect()
+            except Exception as exc:
+                raised.append(exc)
+                raise
+    assert info.value is raised[0]
+    assert not persistent_rdd_ids(spark) - rdds_before
+    assert cache_entry_count(spark) == entries_before
+
+
+def test_query_scope_keeps_a_frame_cached_before_it(spark):
+    rdds_before = persistent_rdd_ids(spark)
+    # cached before the scope, but its buffers first fill inside it
+    kept = spark.range(50).selectExpr("id * 7 AS k").cache()
+    entries_before = cache_entry_count(spark)
+    try:
+        with registry.query_scope(spark):
+            inner = spark.range(10).selectExpr("id * 7 AS k").cache()
+            assert kept.join(inner, "k").count() == 10
+        assert cache_entry_count(spark) == entries_before
+        assert kept.storageLevel.useMemory
+        filled = persistent_rdd_ids(spark) - rdds_before
+        assert len(filled) == 1, filled  # kept's buffers, and only those
+    finally:
+        kept.unpersist(blocking=True)
+    assert not persistent_rdd_ids(spark) & filled

@@ -137,6 +137,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from retail_sales_project_bigdata_spark.registry import query_scope
     from retail_sales_project_bigdata_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -181,13 +182,9 @@ def main() -> int:
             continue
         t0 = time.perf_counter()
         if name not in oracles:
-            n = fn(spark, sf_dir).count()
+            with query_scope(spark):
+                n = fn(spark, sf_dir).count()
             timings[name] = round(time.perf_counter() - t0, 3)
-            # rows-only queries persist multi-consumer frames too (e.g.
-            # rolling_distinct_users_hll's day-sketch frame) — release
-            # them like the oracled branch does, or a full sweep
-            # accumulates block-manager storage per invocation
-            spark.catalog.clearCache()
             print(f"{name:<28} ROWS-ONLY rows={n}  [{timings[name]}s]")
             continue
         try:
@@ -198,13 +195,13 @@ def main() -> int:
             fut = duck_pool.submit(
                 lambda sql=oracles[name]: con.execute(sql).df()
             )
-            s_pdf = fn(spark, sf_dir).toPandas()
+            with query_scope(spark):
+                s_pdf = fn(spark, sf_dir).toPandas()
             ddf = fut.result()
             problems = compare(s_pdf, ddf, name)
         except Exception as e:  # noqa: BLE001
             problems = [f"EXCEPTION {type(e).__name__}: {e}"]
         timings[name] = round(time.perf_counter() - t0, 3)
-        spark.catalog.clearCache()  # per-query persists are not shared across queries
         if problems:
             failed.append(name)
             print(f"{name:<28} FAIL  [{timings[name]}s]")

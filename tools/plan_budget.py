@@ -53,6 +53,7 @@ def budgeted_names(queries: dict) -> list[str]:
 
 def current_counts(sf_dir: str) -> dict[str, dict[str, int]]:
     import __spark_entry__ as entrymod
+    from retail_sales_project_bigdata_spark.registry import query_scope
     from retail_sales_project_bigdata_spark.session import get_spark
 
     spark = get_spark("plan_budget")
@@ -62,14 +63,13 @@ def current_counts(sf_dir: str) -> dict[str, dict[str, int]]:
     queries = entrymod.queries()
     out: dict[str, dict[str, int]] = {}
     for name in budgeted_names(queries):
-        # per-query cache hygiene: a query that persists at build time
-        # (e.g. the skyline's bucket summaries) would otherwise plan as
+        # one scope per query: a query that persists at build time (e.g.
+        # the skyline's bucket summaries) would otherwise plan as
         # InMemoryTableScan inside LATER queries' plans, shifting their
         # exchange counts by compile order.
-        spark.catalog.clearCache()
-        facts = plan_facts(queries[name](spark, sf_dir))
+        with query_scope(spark):
+            facts = plan_facts(queries[name](spark, sf_dir))
         out[name] = {k: facts[k] for k in BUDGET_KEYS}
-    spark.catalog.clearCache()
     return out
 
 

@@ -54,30 +54,28 @@ def main() -> None:
             print(f"!! unknown query: {name}", file=sys.stderr)
             continue
         spark.sparkContext.setJobDescription(f"qtime:{name}")
-        df = queries[name](spark, SF_DIR)
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
             sfx = f"_{args.suffix}" if args.suffix else ""
             path = os.path.join(args.explain_dir, f"{name}{sfx}.txt")
-            try:
-                txt = df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted")
-            except Exception:  # fallback: executed plan string
-                txt = df._jdf.queryExecution().executedPlan().toString()
+            with registry.query_scope(spark):
+                df = queries[name](spark, SF_DIR)
+                try:
+                    txt = df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted")
+                except Exception:  # fallback: executed plan string
+                    txt = df._jdf.queryExecution().executedPlan().toString()
             with open(path, "w") as fh:
                 fh.write(txt)
             print(f"explain -> {path}")
         if args.explain_only:
-            spark.catalog.clearCache()
-            registry.clear_session_memos()
             continue
         times = []
         for _ in range(1 + args.repeat):
-            t0 = time.perf_counter()
-            bench.materialize(queries[name](spark, SF_DIR))
-            times.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
-        registry.clear_session_memos()
+            with registry.query_scope(spark):
+                t0 = time.perf_counter()
+                bench.materialize(queries[name](spark, SF_DIR))
+                times.append(round(time.perf_counter() - t0, 3))
         out[name] = {"cold": times[0], "warm": times[1:],
                      "min": min(times)}
         print(f"{name}: cold={times[0]} warm={times[1:]} min={min(times)}")

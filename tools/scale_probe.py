@@ -105,32 +105,22 @@ def main() -> None:
         args = args[:i] + args[i + 2:]
     runs = int(args[0]) if args else 2
     import __spark_entry__ as entrymod
+    from retail_sales_project_bigdata_spark.registry import query_scope
     from retail_sales_project_bigdata_spark.session import get_spark
 
     spark = get_spark("scale_probe")
     queries = entrymod.queries()
 
     def run_once(name: str, sf_dir: str) -> float:
-        t = time.time()
-        queries[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        elapsed = time.time() - t
-        # same discipline as bench.py/oracle_check.py: queries persist
-        # multi-consumer frames for within-action reuse; nothing is
-        # shared across probe runs, and accumulated caches eventually
-        # stall allocation (GCLocker) in a long in-process sweep.
-        spark.catalog.clearCache()
-        # and clear the memoized trainers (BPE, triangle, segmentation):
-        # otherwise run 2 of min-of-N hits the memo and records a cache
-        # read as the query's cost (the old triangle rows measured 0.03s
-        # at every SF — the checkpoint hit, not the pipeline).
-        from retail_sales_project_bigdata_spark.registry import (
-            clear_session_memos,
-        )
-
-        clear_session_memos()
-        return elapsed
+        # same discipline as bench.py: the scope releases what the query
+        # persisted, so caches cannot accumulate and stall allocation
+        # (GCLocker) in a long in-process sweep.
+        with query_scope(spark):
+            t = time.time()
+            queries[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            return time.time() - t
 
     probes = (
         [(n, s) for n, s in PROBES if n in only]
