@@ -1,5 +1,6 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
+"""Benchmark harness: runs the headline queries at ``SF_DIR``
+($SPARK_GRAFT_SF_DIR, default the sf0.1 testdata) on
+``local[session.CPUS]`` and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
@@ -19,14 +20,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from retail_sales_project_bigdata_spark.registry import query_scope
-from retail_sales_project_bigdata_spark.session import get_spark
+from retail_sales_project_bigdata_spark.session import CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Iterative ML model training (M1-M5) is excluded from the throughput
 # benchmark: those queries measure MLlib convergence, not engine execution
-# (they run under tests/test_ml.py property checks instead).  Set
-# SPARK_GRAFT_BENCH_ML=1 to include them.
+# (they run under tests/test_ml.py property checks instead).
 ML_TRAINING_QUERIES = {
     "als_recommendations",
     "quality_classifier_scores",
@@ -35,6 +35,13 @@ ML_TRAINING_QUERIES = {
     "churn_model_metrics",
     "fpgrowth_itemsets",
 }
+
+# Warm re-time: the slowest RETIME_TOP cold queries, then every other
+# query at or above RETIME_MIN_S seconds within a time budget (see main).
+RETIME_TOP = 48
+RETIME_MIN_S = 0.5
+# Byte budget of the one-line stdout summary (see the end of main).
+STDOUT_BUDGET = 3400
 
 
 def materialize(df) -> None:
@@ -83,16 +90,16 @@ def main() -> None:
     spark = get_spark("bench")
     warmup(spark)
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
-    queries = entrymod.queries()
-    if not os.environ.get("SPARK_GRAFT_BENCH_ML"):
-        queries = {
-            k: v for k, v in queries.items() if k not in ML_TRAINING_QUERIES
-        }
+    queries = {
+        k: v
+        for k, v in entrymod.queries().items()
+        if k not in ML_TRAINING_QUERIES
+    }
 
     # Protocol (VERDICT r2 task 1 / r3 A-A evidence; widened r7): single-
     # execution timings on this VM swing up to 7.7x run-over-run on
     # IDENTICAL code (scheduler/GC noise), so one cold pass is NOT
-    # representative.  Each full run is therefore: (1) a cold pass over
+    # representative.  The run is therefore: (1) a cold pass over
     # every query, then (2) a warm RE-TIME of (a) the slowest RETIME_TOP
     # queries, and (b) — new in r7, closing
     # VERDICT r6 item 6 — EVERY remaining query whose cold time >=
@@ -107,100 +114,68 @@ def main() -> None:
     # the budget could not reach is listed in ``retime_skipped`` so the
     # artifact self-documents which values may still carry cold-pass
     # noise.
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "1")))
-    retime_top = int(os.environ.get("SPARK_GRAFT_BENCH_RETIME_TOP", "48"))
-    retime_min = float(
-        os.environ.get("SPARK_GRAFT_BENCH_RETIME_MIN_S", "0.5")
-    )
-    # The default budget SCALES with the query set (VERDICT r7 item 2):
-    # the driver runs with defaults and cannot set env vars, and the
-    # fixed 180s default left 30 cold-only values in BENCH_r07 that read
+    #
+    # The budget SCALES with the query set (VERDICT r7 item 2): the
+    # fixed 180s budget left 30 cold-only values in BENCH_r07 that read
     # as fake >=2x regressions until cross-checked against
     # ``retime_skipped``.  2.5 s/query covers the observed re-time cost
     # distribution (median warm re-time < 1 s, p95 ~4 s) with slack, so
-    # a defaults run re-times every >= retime_min query and the artifact
-    # carries no cold-only noise.  Env var still overrides for quick
-    # local iterations.
-    retime_budget = float(
-        os.environ.get(
-            "SPARK_GRAFT_BENCH_RETIME_BUDGET_S",
-            str(max(180.0, 2.5 * len(queries))),
-        )
-    )
-    per_run: list[dict[str, float]] = []
-    cold_last: dict[str, float] = {}
-    warm_last: dict[str, float] = {}
-    skipped_last: list[str] = []
-    for _ in range(n_runs):
+    # the run re-times every >= RETIME_MIN_S query and the artifact
+    # carries no cold-only noise.
+    retime_budget = max(180.0, 2.5 * len(queries))
 
-        def timed(name: str) -> float:
-            # The scope releases what the query persisted, so executor
-            # memory stays bounded over the 200+-query set.  Its release
-            # runs outside the timed span.
-            with query_scope(spark):
-                t0 = time.perf_counter()
-                materialize(queries[name](spark, SF_DIR))
-                return round(time.perf_counter() - t0, 3)
-
-        cold = {name: timed(name) for name in sorted(queries)}
-        slowest = [
-            n
-            for n, t in sorted(cold.items(), key=lambda kv: -kv[1])
-            if t >= retime_min
-        ][:retime_top]
-        warm_python_workers(spark)  # see docstring: refork != query cost
-        warm = {name: timed(name) for name in sorted(slowest)}
-        # Budgeted sweep over everything else >= retime_min, cheapest
-        # cold time first (see protocol comment above).
-        extra = sorted(
-            (n for n, t in cold.items()
-             if t >= retime_min and n not in warm),
-            key=lambda n: cold[n],
-        )
-        spent = 0.0
-        skipped: list[str] = []
-        for n in extra:
-            if spent >= retime_budget:
-                skipped.append(n)
-                continue
+    def timed(name: str) -> float:
+        # The scope releases what the query persisted, so executor
+        # memory stays bounded over the 200+-query set.  Its release
+        # runs outside the timed span.
+        with query_scope(spark):
             t0 = time.perf_counter()
-            warm[n] = timed(n)
-            spent += time.perf_counter() - t0
-        final = {
-            n: min(cold[n], warm.get(n, cold[n])) for n in cold
-        }
-        per_run.append(final)
-        cold_last, warm_last, skipped_last = cold, warm, skipped
+            materialize(queries[name](spark, SF_DIR))
+            return round(time.perf_counter() - t0, 3)
 
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        m = len(s) // 2
-        return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2.0
-
-    timings = {
-        name: round(median([r[name] for r in per_run]), 3)
-        for name in per_run[0]
-    }
-    totals = [round(sum(r.values()), 3) for r in per_run]
-    total = round(median(totals), 3)
+    cold = {name: timed(name) for name in sorted(queries)}
+    slowest = [
+        n
+        for n, t in sorted(cold.items(), key=lambda kv: -kv[1])
+        if t >= RETIME_MIN_S
+    ][:RETIME_TOP]
+    warm_python_workers(spark)  # see docstring: refork != query cost
+    warm = {name: timed(name) for name in sorted(slowest)}
+    # Budgeted sweep over everything else >= RETIME_MIN_S, cheapest
+    # cold time first (see protocol comment above).
+    extra = sorted(
+        (n for n, t in cold.items() if t >= RETIME_MIN_S and n not in warm),
+        key=lambda n: cold[n],
+    )
+    spent = 0.0
+    skipped: list[str] = []
+    for n in extra:
+        if spent >= retime_budget:
+            skipped.append(n)
+            continue
+        t0 = time.perf_counter()
+        warm[n] = timed(n)
+        spent += time.perf_counter() - t0
+    timings = {n: min(cold[n], warm.get(n, cold[n])) for n in cold}
+    total = round(sum(timings.values()), 3)
     payload = {
         "metric": "query_set_wall_clock",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf else None,
-        "runs": n_runs,
-        "run_totals": totals,
-        "cold_pass": cold_last,
-        "warm_retimed": warm_last,
-        # >= retime_min queries the warm-retime budget could not reach:
+        "runs": 1,
+        "run_totals": [total],
+        "cold_pass": cold,
+        "warm_retimed": warm,
+        # >= RETIME_MIN_S queries the warm-retime budget could not reach:
         # their recorded value is a SINGLE cold execution and may carry
         # additive scheduler noise (empty when the budget covered all).
-        "retime_skipped": sorted(skipped_last),
+        "retime_skipped": sorted(skipped),
         "protocol": (
-            f"{n_runs} full run(s): cold pass over all queries, then warm "
-            f"re-time of the slowest {retime_top}, then every remaining "
-            f"query >= {retime_min}s cheapest-first within a "
+            "1 full run(s): cold pass over all queries, then warm "
+            f"re-time of the slowest {RETIME_TOP}, then every remaining "
+            f"query >= {RETIME_MIN_S}s cheapest-first within a "
             f"{retime_budget}s budget; per-query value = min(cold, warm) "
             "(timeit-style lower bound); retime_skipped lists >= "
             "threshold queries the budget missed (cold-only values); "
@@ -209,7 +184,7 @@ def main() -> None:
         ),
     }
     line = json.dumps(payload, separators=(",", ":"))
-    # Full payload (all per-query medians) goes to disk; stdout gets a
+    # Full payload (every per-query value) goes to disk; stdout gets a
     # SHORT line.  The driver's stdout capture keeps only a ~4 KB tail,
     # so round 1's full 150+-query line arrived decapitated and recorded
     # parsed=null (VERDICT r1 item 3: "keep the stdout line minimal
@@ -226,10 +201,9 @@ def main() -> None:
     # the two truncated stdout lists to intersect.  A cpus-suffixed copy
     # preserves each run's full map.  Purely additive (bench_out.json
     # still written, same content).
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     out_path_c = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
-        f"bench_out_c{cpus}.json",
+        f"bench_out_c{CPUS}.json",
     )
     with open(out_path_c, "w") as fh:
         fh.write(line + "\n")
@@ -242,9 +216,6 @@ def main() -> None:
     # under that; within the budget we include as many SLOWEST-first
     # entries as fit — in practice ~4-6x more names than before.  Still
     # one JSON line; all existing keys unchanged; entries only added.
-    stdout_budget = int(
-        os.environ.get("SPARK_GRAFT_BENCH_STDOUT_BUDGET", "3400")
-    )
     by_slowest = sorted(timings.items(), key=lambda kv: -kv[1])
 
     def _summary_for(n_q: int) -> dict:
@@ -252,8 +223,8 @@ def main() -> None:
             payload,
             queries=dict(by_slowest[:n_q]),
             n_queries=len(timings),
-            n_retimed=len(warm_last),
-            n_retime_skipped=len(skipped_last),
+            n_retimed=len(warm),
+            n_retime_skipped=len(skipped),
             queries_truncated_to=(
                 f"{n_q} slowest (byte-budgeted); full set in queries_file"
             ),
@@ -271,10 +242,10 @@ def main() -> None:
         s.pop("retime_skipped", None)
         return json.dumps(s, separators=(",", ":"))
 
-    while n_q > 10 and len(_encode(summary)) > stdout_budget:
+    while n_q > 10 and len(_encode(summary)) > STDOUT_BUDGET:
         # Shrink geometrically-ish: drop the cheapest included entries
         # until the line fits (each entry is ~30 bytes).
-        over = len(_encode(summary)) - stdout_budget
+        over = len(_encode(summary)) - STDOUT_BUDGET
         n_q = max(10, n_q - max(1, over // 25))
         summary = _summary_for(n_q)
     print(_encode(summary))

@@ -63,20 +63,17 @@ BPE_NUM_MERGES = 8  # merge-table size for the training loop
 BPE_MIN_PAIR_COUNT = 2  # stop when the best pair is this rare
 
 
-def bpe_train_max_docs() -> int:
-    """Trainer corpus cap (env-overridable for tests).  Each BPE merge
-    round re-aggregates pair counts over the trainer's vocabulary frame,
-    so an UNCAPPED trainer is the one driver loop whose per-round cost
-    grows with the corpus.  Nobody trains a tokenizer on 100 TB — the
-    standard practice is a representative sample — so past the cap the
-    trainer sees a deterministic ``doc_id``-modulus sample (the
-    RECALL_EVAL_MAX_VECS pattern, similarity.py).  A no-op at every
-    driver testdata SF (≤5k docs), so the property tests against the
-    pure-Python trainer stay exact; at the synthesized sf1 (50k docs)
-    and beyond the per-round cost is bounded by the cap."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_BPE_MAX_DOCS", "20000"))
+# Trainer corpus cap.  Each BPE merge round re-aggregates pair counts
+# over the trainer's vocabulary frame, so an UNCAPPED trainer is the one
+# driver loop whose per-round cost grows with the corpus.  Nobody trains
+# a tokenizer on 100 TB — the standard practice is a representative
+# sample — so past the cap the trainer sees a deterministic
+# ``doc_id``-modulus sample (the RECALL_EVAL_MAX_VECS pattern,
+# similarity.py).  A no-op at every shipped testdata SF (≤5k docs), so
+# the property tests against the pure-Python trainer stay exact; at the
+# synthesized sf1 (50k docs) and beyond the per-round cost is bounded by
+# the cap.  Read when the trainer runs, so a test can lower it.
+BPE_TRAIN_MAX_DOCS = 20000
 
 
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,12 +326,11 @@ def _learn_merges(
     not a re-application of the merge chain).
     """
     docs = fan_out(read_table(spark, sf_dir, "documents"))
-    # Deterministic trainer-corpus cap (see bpe_train_max_docs): past the
+    # Deterministic trainer-corpus cap (see BPE_TRAIN_MAX_DOCS): past the
     # cap, train on every step-th doc_id.  The count is one cheap
     # column-less scan; step == 1 (no-op) at every testdata SF.
-    cap = bpe_train_max_docs()
     n_docs = docs.count()
-    step = max(1, -(-n_docs // cap))  # ceil div
+    step = max(1, -(-n_docs // BPE_TRAIN_MAX_DOCS))  # ceil div
     if step > 1:
         docs = docs.filter(F.col("doc_id") % F.lit(step) == F.lit(0))
     vocab = (
@@ -446,7 +442,7 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined to that vocabulary-sized frame (AQE broadcasts it when the
     vocab fits).  Words ABSENT from the trainer frame — single-symbol
     words always, plus genuine out-of-sample words when the trainer ran
-    capped (bpe_train_max_docs) — encode via the learned merge chain
+    capped (BPE_TRAIN_MAX_DOCS) — encode via the learned merge chain
     applied directly in the COALESCE fallback (K bounded folds,
     evaluated per row only on join misses; the identity for
     single-symbol words).  Encode cost is O(|vocab|) plus the miss set,
@@ -476,7 +472,7 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uncapped trainer every multi-symbol word is present, so the misses
     # are single-symbol words where the chain is the identity (size 1 —
     # value-identical to the former ``lit(1)`` default); on a CAPPED
-    # trainer (bpe_train_max_docs) this is the correct out-of-sample
+    # trainer (BPE_TRAIN_MAX_DOCS) this is the correct out-of-sample
     # encoding, not an undercount.
     oos_syms = F.filter(F.split(F.col("word"), ""), lambda s: s != "")
     for _rank, a, b, merged_sym, _cnt in _merges:

@@ -26,7 +26,11 @@ from retail_sales_project_bigdata_spark.functions import (
     pround,
     pround_np,
 )
-from retail_sales_project_bigdata_spark.sources import fan_out, read_table
+from retail_sales_project_bigdata_spark.sources import (
+    fan_out,
+    read_table,
+    table_rows,
+)
 
 N_QUERY_VECS = 10  # vec_id < 10 are the query set
 TOP_K = 10
@@ -697,32 +701,11 @@ WHERE list_dot_product(a.v, b.v) / (a.norm * b.norm) >= {NEAR_DUP_THRESHOLD}
 # (verified by the oracle gate at two different SFs → two different
 # derived geometries).
 #
-# Env pins (SPARK_GRAFT_NEAR_DUP_BANDS / _BAND_PLANES) freeze BOTH
-# engines to a fixed geometry for experiments; unset (default) means
-# derived.  Past what the derived R can absorb (n ~ 4·2^19 ≈ 2M
-# vectors), collisions grow again with recall held — at that scale
-# partition the corpus (IVF lists / semantic_dedup pivots) rather
-# than sharpen bands past the design-recall budget.
+# Past what the derived R can absorb (n ~ 4·2^19 ≈ 2M vectors),
+# collisions grow again with recall held — at that scale partition the
+# corpus (IVF lists / semantic_dedup pivots) rather than sharpen bands
+# past the design-recall budget.
 import math as _math
-import os as _os
-
-_ENV_NEAR_DUP_BANDS = _os.environ.get("SPARK_GRAFT_NEAR_DUP_BANDS")
-_ENV_NEAR_DUP_PLANES = _os.environ.get("SPARK_GRAFT_NEAR_DUP_BAND_PLANES")
-NEAR_DUP_GEOMETRY_PINNED = (
-    _ENV_NEAR_DUP_BANDS is not None or _ENV_NEAR_DUP_PLANES is not None
-)
-NEAR_DUP_BANDS = int(_ENV_NEAR_DUP_BANDS or "12")
-NEAR_DUP_BAND_PLANES = int(_ENV_NEAR_DUP_PLANES or "6")
-# the bucket is a SUM of shiftleft(1, bit) cast to INT: R >= 31 would
-# silently wrap (Spark wraps the shift count mod 32; DuckDB differs) —
-# fail at import instead of corrupting candidate sets.  2^30 buckets per
-# band is far past any corpus this geometry serves.
-if not (1 <= NEAR_DUP_BAND_PLANES <= 30):
-    raise ValueError(
-        "SPARK_GRAFT_NEAR_DUP_BAND_PLANES must be in [1, 30]: the bucket "
-        "is an int32 bitmask and wider shifts wrap differently across "
-        f"engines (got {NEAR_DUP_BAND_PLANES})"
-    )
 
 # Aim ~n/2^R candidate ids per (band, bucket).  4 is the measured sweet
 # spot at sf1: 16 (coarser buckets, R-2) bought recall 0.553 -> 0.658 at
@@ -780,8 +763,6 @@ def near_dup_geometry(n: int) -> tuple[int, int]:
     integer-exact mirror of the SQL derivation in
     :func:`_near_dup_geom_sql` (x.bit_length()-1 == length(bin(x))-1
     == floor(log2 x))."""
-    if NEAR_DUP_GEOMETRY_PINNED:
-        return NEAR_DUP_BAND_PLANES, NEAR_DUP_BANDS
     x = max(n // NEAR_DUP_TARGET_BUCKET_IDS, 1)
     r = min(NEAR_DUP_R_MAX, max(NEAR_DUP_R_MIN, x.bit_length() - 1))
     return r, NEAR_DUP_B_TABLE[r]
@@ -894,7 +875,7 @@ def embedding_near_dup_pairs_lsh(
     engines, so the gate hash-matches despite the algorithm being
     approximate by design.
     """
-    n = read_table(spark, sf_dir, "embeddings").count()
+    n = table_rows(sf_dir, "embeddings")
     return _near_dup_pairs_lsh_from(
         _vectors(spark, sf_dir), threshold, near_dup_geometry(n)
     )
@@ -923,11 +904,7 @@ _NEAR_DUP_B_CASE_SQL = " ".join(
 def _near_dup_geom_sql(count_source: str) -> str:
     """One-row (r, b) relation: the SQL twin of near_dup_geometry —
     integer-exact (length(bin(x))-1 = floor(log2 x); B via the literal
-    CASE table), or the pinned literals when the env knobs are set."""
-    if NEAR_DUP_GEOMETRY_PINNED:
-        return (
-            f"SELECT {NEAR_DUP_BAND_PLANES} AS r, {NEAR_DUP_BANDS} AS b"
-        )
+    CASE table)."""
     return f"""
   SELECT r, CASE r {_NEAR_DUP_B_CASE_SQL} END AS b
   FROM (
@@ -961,8 +938,8 @@ planes AS (
                  * 2654435761 + 987654321) % 4294967296)
               * lcg.a_k + lcg.c_k) % 2147483648)
             / 2147483647.0) * 2.0 - 1.0 AS val
-    FROM range({max(NEAR_DUP_B_MAX, NEAR_DUP_BANDS)}) tb,
-         range({max(NEAR_DUP_R_MAX, NEAR_DUP_BAND_PLANES)}) tr, lcg, geom g
+    FROM range({NEAR_DUP_B_MAX}) tb,
+         range({NEAR_DUP_R_MAX}) tr, lcg, geom g
     WHERE tb.range < g.b AND tr.range < g.r
   )
   GROUP BY band, bit
@@ -999,9 +976,7 @@ EMBEDDING_NEAR_DUP_PAIRS_LSH_SQL = _near_dup_pairs_lsh_sql()
 # 4k vectors still certify pair-level recall (hyperplane collision
 # probability depends only on a pair's angle, so a uniform slice's
 # recall estimates corpus recall) on thousands of true pairs.
-RECALL_EVAL_MAX_VECS = int(
-    _os.environ.get("SPARK_GRAFT_RECALL_EVAL_MAX_VECS", "4000")
-)
+RECALL_EVAL_MAX_VECS = 4000
 
 
 def embedding_near_dup_recall_lsh(
@@ -1023,7 +998,7 @@ def embedding_near_dup_recall_lsh(
     corpus recall because hyperplane collision probability depends only
     on the pair's angle.
     """
-    n_vecs = read_table(spark, sf_dir, "embeddings").count()  # metadata-only
+    n_vecs = table_rows(sf_dir, "embeddings")
     step = max(1, -(-n_vecs // RECALL_EVAL_MAX_VECS))  # ceil div
     vecs = _vectors(spark, sf_dir).filter(
         F.col("vec_id") % F.lit(step) == 0
@@ -1336,7 +1311,7 @@ def _semdedup_assigned_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Split out so tools/semdedup_pair_probe.py and tests can measure the
     pair stage's candidate volume without re-deriving the assignment."""
     vecs = _vectors(spark, sf_dir)
-    n_vecs = read_table(spark, sf_dir, "embeddings").count()  # metadata-only
+    n_vecs = table_rows(sf_dir, "embeddings")
     pivots = (
         vecs.select(
             F.col("vec_id").alias("p_id"),
@@ -1689,7 +1664,7 @@ def semantic_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared contract invariants and that crafted duplicate groups dedup.
     """
     vecs = _vectors(spark, sf_dir)
-    n = read_table(spark, sf_dir, "embeddings").count()  # metadata-only
+    n = table_rows(sf_dir, "embeddings")
     return _semantic_dedup_lsh_from(vecs, n)
 
 

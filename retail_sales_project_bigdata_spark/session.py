@@ -17,7 +17,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Cores of the local master; also the default shuffle parallelism.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def get_spark(
@@ -34,7 +35,6 @@ def get_spark(
     same code runs with ``spark.sql.shuffle.partitions`` sized by the
     submitter and AQE splitting skewed partitions.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         # local-mode heap: the ONE driver JVM hosts all executor threads,
@@ -50,7 +50,7 @@ def get_spark(
         )
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or CPUS),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -78,7 +78,7 @@ def get_spark(
     elif os.environ.get("SPARK_MASTER"):
         builder = builder.master(os.environ["SPARK_MASTER"])
     else:
-        builder = builder.master(f"local[{cpus}]")
+        builder = builder.master(f"local[{CPUS}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -24,8 +24,6 @@ from retail_sales_project_bigdata_spark.schemas import (
     TESTDATA_SCHEMAS,
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def fan_out(df: DataFrame) -> DataFrame:
     """Raise scan parallelism for compute-heavy map phases (S3 note).
@@ -44,6 +42,16 @@ def fan_out(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def _table_path(sf_dir: str, name: str) -> str:
+    """Path of a declared testdata table; ``KeyError`` for any other."""
+    if name not in TESTDATA_SCHEMAS:
+        raise KeyError(
+            f"undeclared table {name!r}; "
+            f"declared: {', '.join(TESTDATA_SCHEMAS)}"
+        )
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def read_table(
@@ -68,13 +76,8 @@ def read_table(
         ensure_package_on_workers,
     )
 
-    if name not in TESTDATA_SCHEMAS:
-        raise KeyError(
-            f"undeclared table {name!r}; "
-            f"declared: {', '.join(TESTDATA_SCHEMAS)}"
-        )
+    path = _table_path(sf_dir, name)
     ensure_package_on_workers(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(path)
     if (
         broadcast_dims
@@ -83,6 +86,16 @@ def read_table(
     ):
         df = F.broadcast(df)
     return df
+
+
+def table_rows(sf_dir: str, name: str) -> int:
+    """Row count of one testdata table from its parquet footer.
+
+    Read on the driver, so sizing a query launches no Spark job.  Each
+    table is one parquet file (the assumption :func:`with_events_schema`
+    also makes).  An undeclared name raises ``KeyError``, as in
+    :func:`read_table`."""
+    return pq.read_metadata(_table_path(sf_dir, name)).num_rows
 
 
 def _on_disk_bytes(path: str) -> int:
@@ -264,36 +277,6 @@ def observed_write(
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """JSON sink (S6) — SegmentationModel.java:156-174."""
     df.write.mode(mode).json(path)
-
-
-def write_range_layout(
-    df: DataFrame,
-    path: str,
-    keys: str | list[str],
-    num_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Range-clustered parquet layout (CLUSTER BY / Z-order-lite): rows
-    are range-partitioned on ``keys`` and sorted within each partition,
-    so every output file covers a DISJOINT key range and its parquet
-    row-group min/max statistics become file-level prune filters — a
-    point or range predicate on the layout key skips all but ~1 file at
-    any table size.  This is the write-side half of data-skipping:
-    bucketing co-locates JOIN keys; range layout localizes RANGE
-    predicates (time, id prefixes).  Disjointness is asserted in
-    tests/test_colutils_and_io.py.
-
-    num_files should target the production file-size sweet spot
-    (~128 MB-1 GB per file); it fixes write parallelism, not read —
-    readers still split files by row group.
-    """
-    cols = [keys] if isinstance(keys, str) else list(keys)
-    (
-        df.repartitionByRange(num_files, *cols)
-        .sortWithinPartitions(*cols)
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def compact_small_files(
@@ -607,8 +590,8 @@ def cluster_parquet(
     cluster_by: list[str],
     n_files: int = 8,
 ) -> None:
-    """Range-clustered parquet rewrite — the data-layout op behind
-    min/max (zone-map) file skipping at 100 TB.
+    """Range-clustered parquet rewrite (CLUSTER BY / Z-order-lite) — the
+    data-layout op behind min/max (zone-map) file skipping at 100 TB.
 
     ``repartitionByRange`` range-partitions on the clustering keys
     (sampled boundaries ⇒ balanced files even under skew) and
@@ -616,9 +599,16 @@ def cluster_parquet(
     and row group carries a TIGHT, pairwise-disjoint min/max band on the
     leading key.  A reader filtering on that key then prunes to ~1 of
     ``n_files`` files from parquet footer statistics alone — before any
-    row is decoded.  (Spark's parquet reader does this row-group-level
-    skipping natively from the pushed filter; the pyarrow inspection in
-    ``file_minmax`` makes the effect testable without a cluster.)"""
+    row is decoded.  This is the write-side half of data-skipping:
+    bucketing co-locates JOIN keys; range layout localizes RANGE
+    predicates (time, id prefixes).  (Spark's parquet reader does this
+    row-group-level skipping natively from the pushed filter; the
+    pyarrow inspection in ``file_minmax`` makes the effect testable
+    without a cluster.)
+
+    ``n_files`` should target the production file-size sweet spot
+    (~128 MB-1 GB per file); it fixes write parallelism, not read —
+    readers still split files by row group."""
     (
         df.repartitionByRange(n_files, *[F.col(c) for c in cluster_by])
         .sortWithinPartitions(*cluster_by)

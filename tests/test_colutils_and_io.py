@@ -430,13 +430,13 @@ def test_range_layout_files_are_disjoint(spark, tmp_path):
     and the layout must preserve the data."""
     import glob
 
-    from retail_sales_project_bigdata_spark.sources import write_range_layout
+    from retail_sales_project_bigdata_spark.sources import cluster_parquet
 
     df = spark.range(10_000).select(
         (F.col("id") * 7919 % 10_000).alias("k"), F.col("id").alias("v")
     )
     out = str(tmp_path / "ranged")
-    write_range_layout(df, out, "k", num_files=8)
+    cluster_parquet(df, out, ["k"], n_files=8)
     back = spark.read.parquet(out)
     assert back.count() == 10_000
     parts = sorted(glob.glob(out + "/part-*.parquet"))

@@ -218,13 +218,14 @@ def test_bpe_encode_stats_matches_reference(spark):
 
 
 def test_bpe_capped_trainer_out_of_sample_encode(spark, monkeypatch, tmp_path):
-    """With the trainer-corpus cap engaged (SPARK_GRAFT_BPE_MAX_DOCS
+    """With the trainer-corpus cap engaged (BPE_TRAIN_MAX_DOCS
     below the doc count), the merge table must equal the pure-Python
     trainer run on the SAME doc_id-modulus sample, and encode_stats must
     encode the FULL corpus — out-of-sample words via the merge chain,
     never the old single-token default.  Uses a crafted corpus because
     the driver testdata's vocabulary is too small to leave any word out
     of even a tiny sample."""
+    from retail_sales_project_bigdata_spark.operators import curation
     from retail_sales_project_bigdata_spark.operators.curation import (
         BPE_MIN_PAIR_COUNT,
         BPE_NUM_MERGES,
@@ -252,17 +253,12 @@ def test_bpe_capped_trainer_out_of_sample_encode(spark, monkeypatch, tmp_path):
     )
     sf_dir = str(tmp_path)
 
-    monkeypatch.setenv("SPARK_GRAFT_BPE_MAX_DOCS", "5")
-    try:
-        got_merges = [
-            tuple(r) for r in bpe_train_merges(spark, sf_dir).collect()
-        ]
-        got_stats = {
-            r["source"]: (r["total_words"], r["total_tokens"])
-            for r in bpe_encode_stats(spark, sf_dir).collect()
-        }
-    finally:
-        monkeypatch.delenv("SPARK_GRAFT_BPE_MAX_DOCS")
+    monkeypatch.setattr(curation, "BPE_TRAIN_MAX_DOCS", 5)
+    got_merges = [tuple(r) for r in bpe_train_merges(spark, sf_dir).collect()]
+    got_stats = {
+        r["source"]: (r["total_words"], r["total_tokens"])
+        for r in bpe_encode_stats(spark, sf_dir).collect()
+    }
 
     sample_counts = collections.Counter(
         w for i, text, *_ in docs if i % 2 == 0 for w in text.split(" ")

@@ -1,5 +1,6 @@
 """Every ``SPARK_GRAFT_*`` environment variable the code reads is listed
-in the README's Environment table, and the table lists no other."""
+in the README's Environment table, the table lists no other, and each
+variable is named in one module only."""
 
 from __future__ import annotations
 
@@ -16,13 +17,14 @@ SCANNED = [
 KNOB = re.compile(r"SPARK_GRAFT_[A-Z0-9_]+")
 
 
-def _code_knobs() -> set[str]:
-    found: set[str] = set()
+def _knob_modules() -> dict[str, set[str]]:
+    found: dict[str, set[str]] = {}
     for entry in SCANNED:
         path = REPO / entry
         files = path.rglob("*.py") if path.is_dir() else [path]
         for f in files:
-            found |= set(KNOB.findall(f.read_text()))
+            for knob in KNOB.findall(f.read_text()):
+                found.setdefault(knob, set()).add(str(f.relative_to(REPO)))
     return found
 
 
@@ -33,4 +35,9 @@ def _readme_knobs() -> set[str]:
 
 
 def test_every_knob_is_documented():
-    assert _code_knobs() == _readme_knobs()
+    assert set(_knob_modules()) == _readme_knobs()
+
+
+def test_each_knob_is_named_in_one_module():
+    shared = {k: m for k, m in _knob_modules().items() if len(m) > 1}
+    assert not shared, shared

@@ -17,6 +17,14 @@ def test_guard_passes_below_bound(spark):
     guard_anchor_rows(spark.range(10), "toy", "none")  # no raise
 
 
+def test_guard_fires_exactly_past_bound(spark, monkeypatch):
+    """A bound of 5 admits 5 rows and rejects 6."""
+    monkeypatch.delenv(ANCHOR_MAX_ROWS_ENV, raising=False)
+    guard_anchor_rows(spark.range(5), "toy", "none", default_bound=5)
+    with pytest.raises(ValueError, match="6 rows > bound 5"):
+        guard_anchor_rows(spark.range(6), "toy", "none", default_bound=5)
+
+
 def test_guard_raises_above_bound(spark, monkeypatch):
     monkeypatch.setenv(ANCHOR_MAX_ROWS_ENV, "5")
     with pytest.raises(ValueError, match="exactness ANCHOR"):

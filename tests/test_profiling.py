@@ -84,3 +84,22 @@ def test_profile_reports_executed_plan_facts(spark):
         "python_eval": 0,
         "python_eval_nodes": 0,
     }
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "embedding_near_dup_pairs_lsh",
+        "embedding_near_dup_recall_lsh",
+        "semantic_dedup",
+        "semantic_dedup_lsh",
+    ],
+)
+def test_embedding_sizing_reads_the_footer(spark, name):
+    """These builders size their geometry from the embeddings row count.
+    Read from the parquet footer, it costs no job: the builders run no
+    Spark job before they return, where a ``count()`` of the table would
+    run two."""
+    from retail_sales_project_bigdata_spark.profiling import profile_query
+
+    assert profile_query(spark, name, SF_SMALL)["build_jobs"] == 0

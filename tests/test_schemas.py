@@ -48,7 +48,18 @@ def test_declared_schema_matches_footer(spark, request, sf, table):
 
 
 def test_read_table_rejects_undeclared_name(spark):
-    from retail_sales_project_bigdata_spark.sources import read_table
+    from retail_sales_project_bigdata_spark.sources import read_table, table_rows
 
     with pytest.raises(KeyError, match="declared: region, nation"):
         read_table(spark, SF_SMALL, "no_such_table")
+    with pytest.raises(KeyError, match="declared: region, nation"):
+        table_rows(SF_SMALL, "no_such_table")
+
+
+@pytest.mark.parametrize("table", list(TESTDATA_SCHEMAS))
+def test_table_rows_matches_spark_count(spark, table):
+    """The footer row count that sizes a query equals what Spark counts."""
+    from retail_sales_project_bigdata_spark.sources import table_rows
+
+    path = f"{SF_SMALL}/{table}.parquet"
+    assert table_rows(SF_SMALL, table) == spark.read.parquet(path).count()

@@ -12,11 +12,7 @@ from retail_sales_project_bigdata_spark.operators.skew import (
     salted_join,
 )
 from retail_sales_project_bigdata_spark.plans import physical_plan
-from retail_sales_project_bigdata_spark.sources import read_table
-from retail_sales_project_bigdata_spark.sources.bucketing import (
-    bucketed_join,
-    write_bucketed,
-)
+from retail_sales_project_bigdata_spark.sources import read_table, write_bucketed
 from tests.conftest import SF_SMALL
 
 
@@ -103,12 +99,13 @@ def bucketed_tables(spark):
     orders = read_table(spark, SF_SMALL, "orders", broadcast_dims=False).select(
         "o_orderkey", "o_custkey"
     )
-    write_bucketed(li, "b_lineitem", "l_orderkey", 4)
+    write_bucketed(li, "b_lineitem", "l_orderkey", 4, sort_cols="l_orderkey")
     write_bucketed(
         orders.withColumnRenamed("o_orderkey", "l_orderkey"),
         "b_orders",
         "l_orderkey",
         4,
+        sort_cols="l_orderkey",
     )
     yield
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
@@ -121,7 +118,9 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        joined = bucketed_join(spark, "b_lineitem", "b_orders", "l_orderkey")
+        joined = spark.table("b_lineitem").join(
+            spark.table("b_orders"), "l_orderkey"
+        )
         plan = physical_plan(joined)
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan, plan

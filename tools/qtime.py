@@ -10,7 +10,8 @@ Usage:
     python tools/qtime.py --explain-dir /tmp/explain --suffix before q1 ...
     python tools/qtime.py --explain-only --explain-dir /tmp/explain ... q1
 
-Respects $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
+Reads the testdata directory and core count the way bench.py does
+(``bench.SF_DIR``, ``session.CPUS``).
 """
 
 from __future__ import annotations
@@ -25,9 +26,9 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
+import bench  # noqa: E402
+from retail_sales_project_bigdata_spark import registry  # noqa: E402
 from retail_sales_project_bigdata_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
@@ -41,9 +42,6 @@ def main() -> None:
                     help="file suffix for explain dumps (before/after)")
     ap.add_argument("--explain-only", action="store_true")
     args = ap.parse_args()
-
-    import bench
-    from retail_sales_project_bigdata_spark import registry
 
     spark = get_spark("qtime")
     bench.warmup(spark)
@@ -59,12 +57,9 @@ def main() -> None:
             sfx = f"_{args.suffix}" if args.suffix else ""
             path = os.path.join(args.explain_dir, f"{name}{sfx}.txt")
             with registry.query_scope(spark):
-                df = queries[name](spark, SF_DIR)
-                try:
-                    txt = df._sc._jvm.PythonSQLUtils.explainString(
-                        df._jdf.queryExecution(), "formatted")
-                except Exception:  # fallback: executed plan string
-                    txt = df._jdf.queryExecution().executedPlan().toString()
+                df = queries[name](spark, bench.SF_DIR)
+                txt = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted")
             with open(path, "w") as fh:
                 fh.write(txt)
             print(f"explain -> {path}")
@@ -74,7 +69,7 @@ def main() -> None:
         for _ in range(1 + args.repeat):
             with registry.query_scope(spark):
                 t0 = time.perf_counter()
-                bench.materialize(queries[name](spark, SF_DIR))
+                bench.materialize(queries[name](spark, bench.SF_DIR))
                 times.append(round(time.perf_counter() - t0, 3))
         out[name] = {"cold": times[0], "warm": times[1:],
                      "min": min(times)}
