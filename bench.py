@@ -4,9 +4,13 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is materialized with the noop sink (full execution, no driver
-transfer, no output I/O) — measures the compute+shuffle cost the cluster
-would pay.
+Each query runs through ``profiling.profile_query``, the same path as
+``python -m retail_sales_project_bigdata_spark profile <name>``: the
+builder, then a ``toRdd().count()`` over the query's own execution (full
+execution, no rows to the driver, no output I/O).  A query's time is
+``build_sec + wall_sec``.  ``bench_out.json`` and
+``bench_out_c<cpus>.json`` also carry ``profiles``: per query, the
+``profile_query`` record of the run whose time was kept.
 """
 
 from __future__ import annotations
@@ -19,7 +23,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from retail_sales_project_bigdata_spark.registry import query_scope
+from retail_sales_project_bigdata_spark.profiling import (
+    profile_query,
+    warm_python_workers,
+    warmup,
+)
 from retail_sales_project_bigdata_spark.session import CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -44,51 +52,9 @@ RETIME_MIN_S = 0.5
 STDOUT_BUDGET = 3400
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def warm_python_workers(spark) -> None:
-    """Fork the Python worker pool + Arrow serialization path, and trigger
-    the heavy imports (numpy/pandas) inside every worker, so a mapInPandas
-    query measures compute, not 32x fork+import cost.  Called once before
-    the cold pass AND again before the warm re-time pass: the worker pool
-    can decay while hundreds of JVM-only queries run between two media
-    queries, and a re-timed query that pays the ~10s refork records a
-    worker-pool artifact, not its own cost (BENCH_r05's resize_media at
-    11.98s vs a 1.4s steady state)."""
-
-    def _warm_imports(batches):
-        import numpy  # noqa: F401  (worker-side import warmup)
-        import pandas  # noqa: F401
-
-        yield from batches
-
-    materialize(
-        spark.range(32, numPartitions=32).mapInPandas(
-            _warm_imports, schema="id long"
-        )
-    )
-
-
-def warmup(spark) -> None:
-    """One small end-to-end job before timing: JVM JIT, codegen compiler,
-    shuffle machinery, and the parquet footer cache all initialize here
-    instead of inside whichever query sorts first alphabetically."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(os.path.join(SF_DIR, "region.parquet"))
-    materialize(
-        df.crossJoin(F.broadcast(df.select(F.col("r_regionkey").alias("k"))))
-        .groupBy("k")
-        .count()
-    )
-    warm_python_workers(spark)
-
-
 def main() -> None:
     spark = get_spark("bench")
-    warmup(spark)
+    warmup(spark, SF_DIR)
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
     queries = {
         k: v
@@ -124,27 +90,31 @@ def main() -> None:
     # carries no cold-only noise.
     retime_budget = max(180.0, 2.5 * len(queries))
 
-    def timed(name: str) -> float:
-        # The scope releases what the query persisted, so executor
-        # memory stays bounded over the 200+-query set.  Its release
-        # runs outside the timed span.
-        with query_scope(spark):
-            t0 = time.perf_counter()
-            materialize(queries[name](spark, SF_DIR))
-            return round(time.perf_counter() - t0, 3)
+    def timed(name: str) -> tuple[float, dict]:
+        # profile_query's scope releases what the query persisted, so
+        # executor memory stays bounded over the 200+-query set.  Its
+        # release runs outside the timed spans.
+        prof = profile_query(spark, name, SF_DIR)
+        return round(prof["build_sec"] + prof["wall_sec"], 3), prof
 
-    cold = {name: timed(name) for name in sorted(queries)}
+    cold_runs = {name: timed(name) for name in sorted(queries)}
+    cold = {n: t for n, (t, _) in cold_runs.items()}
     slowest = [
         n
         for n, t in sorted(cold.items(), key=lambda kv: -kv[1])
         if t >= RETIME_MIN_S
     ][:RETIME_TOP]
-    warm_python_workers(spark)  # see docstring: refork != query cost
-    warm = {name: timed(name) for name in sorted(slowest)}
+    # refork != query cost (see profiling.warm_python_workers)
+    warm_python_workers(spark)
+    warm_runs = {name: timed(name) for name in sorted(slowest)}
     # Budgeted sweep over everything else >= RETIME_MIN_S, cheapest
     # cold time first (see protocol comment above).
     extra = sorted(
-        (n for n, t in cold.items() if t >= RETIME_MIN_S and n not in warm),
+        (
+            n
+            for n, t in cold.items()
+            if t >= RETIME_MIN_S and n not in warm_runs
+        ),
         key=lambda n: cold[n],
     )
     spent = 0.0
@@ -154,9 +124,16 @@ def main() -> None:
             skipped.append(n)
             continue
         t0 = time.perf_counter()
-        warm[n] = timed(n)
+        warm_runs[n] = timed(n)
         spent += time.perf_counter() - t0
-    timings = {n: min(cold[n], warm.get(n, cold[n])) for n in cold}
+    warm = {n: t for n, (t, _) in warm_runs.items()}
+    # min(cold, warm), and the profile of the run that gave it (cold on
+    # a tie).
+    kept = {
+        n: min(run, warm_runs.get(n, run), key=lambda r: r[0])
+        for n, run in cold_runs.items()
+    }
+    timings = {n: t for n, (t, _) in kept.items()}
     total = round(sum(timings.values()), 3)
     payload = {
         "metric": "query_set_wall_clock",
@@ -172,6 +149,7 @@ def main() -> None:
         # their recorded value is a SINGLE cold execution and may carry
         # additive scheduler noise (empty when the budget covered all).
         "retime_skipped": sorted(skipped),
+        "profiles": {n: prof for n, (_, prof) in kept.items()},
         "protocol": (
             "1 full run(s): cold pass over all queries, then warm "
             f"re-time of the slowest {RETIME_TOP}, then every remaining "
@@ -179,8 +157,10 @@ def main() -> None:
             f"{retime_budget}s budget; per-query value = min(cold, warm) "
             "(timeit-style lower bound); retime_skipped lists >= "
             "threshold queries the budget missed (cold-only values); "
-            "each query built and run in its own query_scope; noop "
-            "sink, warmed JVM; medians across runs"
+            "each query built and run in its own query_scope through "
+            "profiling.profile_query (a toRdd().count() over the query's "
+            "own execution, not a noop write; value = build_sec + "
+            "wall_sec), warmed JVM"
         ),
     }
     line = json.dumps(payload, separators=(",", ":"))
@@ -233,13 +213,14 @@ def main() -> None:
 
     n_q = len(by_slowest)
     summary = _summary_for(n_q)
-    # The full cold/warm breakdowns live in the file only — the driver's
-    # stdout capture keeps a ~4 KB tail.
+    # The full cold/warm breakdowns and the profiles live in the file
+    # only — the driver's stdout capture keeps a ~4 KB tail.
     def _encode(s: dict) -> str:
         s = dict(s)
         s.pop("cold_pass", None)
         s.pop("warm_retimed", None)
         s.pop("retime_skipped", None)
+        s.pop("profiles", None)
         return json.dumps(s, separators=(",", ":"))
 
     while n_q > 10 and len(_encode(summary)) > STDOUT_BUDGET:

@@ -9,7 +9,8 @@ modes).  The rebuild exposes one argparse CLI:
     python -m retail_sales_project_bigdata_spark <job> [options]
 
     jobs: preprocess | churn | baskets | recommend | segmentation |
-          top-products | query <name>
+          top-products | query <name> | explain <name> |
+          profile <name> [<name> ...]
 
 Each job builds its plan through the operators package and writes/prints
 results — the same code paths the driver contract exercises.
@@ -89,10 +90,12 @@ def build_parser() -> argparse.ArgumentParser:
 
     spr = sub.add_parser(
         "profile",
-        help="run a registered query (noop sink) and report wall time, "
-        "job/stage/task counts, and plan facts",
+        help="warm up, then run each named query through "
+        "profiling.profile_query (bench.py's timed path) and print one "
+        "JSON line per name: build and execution time, job/stage/task "
+        "counts, and plan facts; repeat a name for cold + warm runs",
     )
-    spr.add_argument("name")
+    spr.add_argument("names", nargs="+", metavar="name")
     return p
 
 
@@ -198,9 +201,14 @@ def _run_job(args: argparse.Namespace, spark) -> int:
 
         top_products(spark, sf).limit(args.limit).show(args.limit, False)
     elif args.job == "profile":
-        from retail_sales_project_bigdata_spark.profiling import profile_query
+        from retail_sales_project_bigdata_spark.profiling import (
+            profile_query,
+            warmup,
+        )
 
-        print(json.dumps(profile_query(spark, args.name, sf)))
+        warmup(spark, sf)
+        for name in args.names:
+            print(json.dumps(profile_query(spark, name, sf)), flush=True)
     elif args.job in ("query", "explain"):
         from retail_sales_project_bigdata_spark.registry import queries as reg_queries
 

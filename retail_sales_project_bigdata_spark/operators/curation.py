@@ -51,7 +51,11 @@ from retail_sales_project_bigdata_spark.operators.textstats import (
     _TOKENIZE,
     _tokens,
 )
-from retail_sales_project_bigdata_spark.sources import fan_out, read_table
+from retail_sales_project_bigdata_spark.sources import (
+    fan_out,
+    read_table,
+    table_rows,
+)
 
 DSIR_TARGET_LANG = "en"  # the "target domain" slice scores are aimed at
 DSIR_SELECT_N = 100  # deterministic resample size (top-N by weight)
@@ -327,9 +331,10 @@ def _learn_merges(
     """
     docs = fan_out(read_table(spark, sf_dir, "documents"))
     # Deterministic trainer-corpus cap (see BPE_TRAIN_MAX_DOCS): past the
-    # cap, train on every step-th doc_id.  The count is one cheap
-    # column-less scan; step == 1 (no-op) at every testdata SF.
-    n_docs = docs.count()
+    # cap, train on every step-th doc_id.  The count comes from the
+    # parquet footers (no Spark job); step == 1 (no-op) at every
+    # testdata SF.
+    n_docs = table_rows(sf_dir, "documents")
     step = max(1, -(-n_docs // BPE_TRAIN_MAX_DOCS))  # ceil div
     if step > 1:
         docs = docs.filter(F.col("doc_id") % F.lit(step) == F.lit(0))

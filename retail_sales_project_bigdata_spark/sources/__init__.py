@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,13 +90,15 @@ def read_table(
 
 
 def table_rows(sf_dir: str, name: str) -> int:
-    """Row count of one testdata table from its parquet footer.
+    """Row count of one testdata table from its parquet footers.
 
-    Read on the driver, so sizing a query launches no Spark job.  Each
-    table is one parquet file (the assumption :func:`with_events_schema`
-    also makes).  An undeclared name raises ``KeyError``, as in
-    :func:`read_table`."""
-    return pq.read_metadata(_table_path(sf_dir, name)).num_rows
+    Read on the driver, so sizing a query launches no Spark job.  The
+    table may be one parquet file or a Spark output directory, whose
+    ``_SUCCESS`` and ``.crc`` files pyarrow skips.  An undeclared name
+    raises ``KeyError``, as in :func:`read_table`."""
+    return ds.dataset(
+        _table_path(sf_dir, name), format="parquet"
+    ).count_rows()
 
 
 def _on_disk_bytes(path: str) -> int:
@@ -168,14 +171,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "props",
     )
-
-
-def read_tables(
-    spark: SparkSession, sf_dir: str, *names: str, broadcast_dims: bool = True
-) -> dict[str, DataFrame]:
-    if not names:
-        names = tuple(TESTDATA_SCHEMAS)
-    return {n: read_table(spark, sf_dir, n, broadcast_dims) for n in names}
 
 
 def read_csv(
@@ -272,55 +267,6 @@ def observed_write(
     observed = df.observe(obs, *[c.alias(n) for n, c in cols.items()])
     write_parquet(observed, path, partition_by=partition_by)
     return obs.get
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON sink (S6) — SegmentationModel.java:156-174."""
-    df.write.mode(mode).json(path)
-
-
-def compact_small_files(
-    spark: SparkSession, path: str, target_rows_per_file: int
-) -> int:
-    """Small-files compaction — the table-maintenance op every streaming
-    / incremental sink needs at scale (thousands of kilobyte files turn
-    scans into a metadata/open() benchmark).  Rewrites the dataset into
-    ``ceil(rows / target_rows_per_file)`` files via a round-robin
-    repartition (no key skew possible), staging to a sibling temp dir
-    and swapping via the Hadoop FileSystem API so readers never see a
-    half-written directory.  Returns the new file count.
-
-    At 100 TB you'd compact per PARTITION directory (bounded rewrite
-    amplification) on a schedule keyed to small-file counts; the
-    per-directory primitive is exactly this function.
-    """
-    import math
-
-    df = spark.read.parquet(path)
-    n = df.count()
-    n_files = max(1, math.ceil(n / target_rows_per_file))
-    tmp = path.rstrip("/") + "._compact_tmp"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    dst = HPath(path)
-    fs = dst.getFileSystem(hconf)
-    # Swap via rename-aside, not delete-then-rename: a crash between a
-    # delete and the rename-in would leave NO live dataset at `path`.
-    # With rename-aside the old data survives (at worst under ._compact_old)
-    # at every step, and a failed rename-in restores it.
-    old = HPath(path.rstrip("/") + "._compact_old")
-    if fs.exists(old):
-        fs.delete(old, True)
-    if not fs.rename(dst, old):  # pragma: no cover — same-FS rename
-        raise RuntimeError(f"rename({path}, {old}) returned false")
-    if not fs.rename(HPath(tmp), dst):  # pragma: no cover
-        fs.rename(old, dst)  # restore the original dataset
-        raise RuntimeError(f"rename({tmp}, {path}) returned false")
-    fs.delete(old, True)
-    return n_files
 
 
 def write_bucketed(

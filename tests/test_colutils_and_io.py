@@ -449,24 +449,3 @@ def test_range_layout_files_are_disjoint(spark, tmp_path):
     spans.sort()
     for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
         assert hi1 < lo2, spans  # disjoint, ordered ranges
-
-
-def test_compact_small_files(spark, tmp_path):
-    """Compaction must shrink the file count to the target and keep the
-    data byte-identical; the directory swap leaves no temp residue."""
-    import glob
-    import os
-
-    from retail_sales_project_bigdata_spark.sources import compact_small_files
-
-    out = str(tmp_path / "frag")
-    df = spark.range(5_000).select(F.col("id"), (F.col("id") % 13).alias("g"))
-    df.repartition(64).write.parquet(out)  # the small-files mess
-    assert len(glob.glob(out + "/part-*.parquet")) == 64
-    n_files = compact_small_files(spark, out, target_rows_per_file=1_000)
-    assert n_files == 5
-    assert len(glob.glob(out + "/part-*.parquet")) == 5
-    assert not os.path.exists(out + "._compact_tmp")
-    back = spark.read.parquet(out)
-    assert back.count() == 5_000
-    assert back.agg(F.sum("id")).first()[0] == 5_000 * 4_999 // 2

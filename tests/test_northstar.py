@@ -19,6 +19,7 @@ from retail_sales_project_bigdata_spark.operators.similarity import (
     ann_lsh_topk,
     lsh_signatures,
 )
+from retail_sales_project_bigdata_spark.registry import query_scope
 from tests.conftest import SF_SMALL
 
 
@@ -77,17 +78,18 @@ def test_prefix_filter_join_adversarial_corpus(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
         f"{sf_dir}/documents.parquet"
     )
-    exact = {
-        (r.d1, r.d2, r.n_common, r.jaccard)
-        for r in ngram_jaccard_pairs(spark, sf_dir).collect()
-    }
-    pref = {
-        (r.d1, r.d2, r.n_common, r.jaccard)
-        for r in ngram_jaccard_pairs_prefix(spark, sf_dir).collect()
-    }
+    with query_scope(spark):  # drops the crafted corpus's shingle cache
+        exact = {
+            (r.d1, r.d2, r.n_common, r.jaccard)
+            for r in ngram_jaccard_pairs(spark, sf_dir).collect()
+        }
+    with query_scope(spark):
+        pref = {
+            (r.d1, r.d2, r.n_common, r.jaccard)
+            for r in ngram_jaccard_pairs_prefix(spark, sf_dir).collect()
+        }
     assert exact == pref
     assert {(d1, d2) for d1, d2, _, _ in pref} == {(100, 101), (200, 201)}
-    spark.catalog.clearCache()  # drop the crafted corpus's shingle cache
 
 
 def test_incremental_near_dup_classifies_batch_against_corpus_only(
@@ -114,10 +116,11 @@ def test_incremental_near_dup_classifies_batch_against_corpus_only(
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
         f"{sf_dir}/documents.parquet"
     )
-    out = {
-        r.doc_id: r
-        for r in incremental_near_dup_new_docs(spark, sf_dir).collect()
-    }
+    with query_scope(spark):  # drops the crafted corpus's shingle cache
+        out = {
+            r.doc_id: r
+            for r in incremental_near_dup_new_docs(spark, sf_dir).collect()
+        }
     assert set(out) == {5, 10, 15, 20}
     assert out[5].status == "near_dup_of_corpus"
     assert out[5].best_match_doc_id == 1
@@ -126,7 +129,6 @@ def test_incremental_near_dup_classifies_batch_against_corpus_only(
         assert out[novel_id].status == "novel"
         assert out[novel_id].n_corpus_matches == 0
         assert out[novel_id].best_match_doc_id == -1
-    spark.catalog.clearCache()  # drop the crafted corpus's shingle cache
 
 
 def test_simhash_identical_docs_collide(spark):
@@ -450,9 +452,10 @@ def test_semantic_dedup_lsh_deterministic(spark):
     )
     from tests.conftest import SF_SMALL
 
-    one = sorted(map(tuple, semantic_dedup_lsh(spark, SF_SMALL).collect()))
-    spark.catalog.clearCache()
-    two = sorted(map(tuple, semantic_dedup_lsh(spark, SF_SMALL).collect()))
+    with query_scope(spark):
+        one = sorted(map(tuple, semantic_dedup_lsh(spark, SF_SMALL).collect()))
+    with query_scope(spark):
+        two = sorted(map(tuple, semantic_dedup_lsh(spark, SF_SMALL).collect()))
     assert one == two
 
 

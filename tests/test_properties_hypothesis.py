@@ -16,6 +16,7 @@ from retail_sales_project_bigdata_spark.functions import (
     stable_sum,
     week_no,
 )
+from retail_sales_project_bigdata_spark.registry import query_scope
 
 _slow = settings(
     max_examples=12,
@@ -422,12 +423,12 @@ def test_prefix_join_lossless_on_random_corpora(spark, docs):
             [(i, " ".join(toks)) for i, toks in enumerate(docs)],
             "doc_id long, text string",
         ).write.parquet(f"{sf_dir}/documents.parquet")
-        got = {
-            (r.d1, r.d2): (r.n_common, r.jaccard)
-            for r in ngram_jaccard_pairs_prefix(spark, sf_dir).collect()
-        }
+        with query_scope(spark):  # per-example shingle cache
+            got = {
+                (r.d1, r.d2): (r.n_common, r.jaccard)
+                for r in ngram_jaccard_pairs_prefix(spark, sf_dir).collect()
+            }
     finally:
-        spark.catalog.clearCache()  # per-example shingle cache
         shutil.rmtree(sf_dir, ignore_errors=True)
     assert got == expected
 
@@ -499,16 +500,16 @@ def test_incremental_near_dup_matches_reference_on_random_corpora(
             [(i, " ".join(toks)) for i, toks in enumerate(docs)],
             "doc_id long, text string",
         ).write.parquet(f"{sf_dir}/documents.parquet")
-        got = {
-            r.doc_id: (
-                r.status,
-                r.n_corpus_matches,
-                r.best_match_doc_id,
-                r.best_jaccard,
-            )
-            for r in incremental_near_dup_new_docs(spark, sf_dir).collect()
-        }
+        with query_scope(spark):
+            got = {
+                r.doc_id: (
+                    r.status,
+                    r.n_corpus_matches,
+                    r.best_match_doc_id,
+                    r.best_jaccard,
+                )
+                for r in incremental_near_dup_new_docs(spark, sf_dir).collect()
+            }
     finally:
-        spark.catalog.clearCache()
         shutil.rmtree(sf_dir, ignore_errors=True)
     assert got == expected

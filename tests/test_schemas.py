@@ -63,3 +63,21 @@ def test_table_rows_matches_spark_count(spark, table):
 
     path = f"{SF_SMALL}/{table}.parquet"
     assert table_rows(SF_SMALL, table) == spark.read.parquet(path).count()
+
+
+def test_table_rows_reads_spark_output_directory(spark, tmp_path):
+    """A table written by Spark is a directory of part files beside
+    ``_SUCCESS`` and ``.crc`` files; its footer count is Spark's count."""
+    from retail_sales_project_bigdata_spark.sources import table_rows
+
+    path = str(tmp_path / "documents.parquet")
+    spark.read.parquet(f"{SF_SMALL}/documents.parquet").repartition(
+        3
+    ).write.parquet(path)
+    names = os.listdir(path)
+    assert "_SUCCESS" in names
+    assert any(n.endswith(".crc") for n in names)
+    assert sum(n.startswith("part-") for n in names) == 3
+    assert table_rows(str(tmp_path), "documents") == (
+        spark.read.parquet(path).count()
+    )

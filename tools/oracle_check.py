@@ -137,6 +137,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from retail_sales_project_bigdata_spark.profiling import warmup
     from retail_sales_project_bigdata_spark.registry import query_scope
     from retail_sales_project_bigdata_spark.session import get_spark
 
@@ -156,18 +157,9 @@ def main() -> int:
 
     import time
 
-    # bench.py's warmup discipline: initialize JIT/codegen/shuffle and the
-    # Python worker pool BEFORE the first timed query, so the alphabetical
-    # first entry doesn't absorb session startup in its number.
-    from pyspark.sql import functions as F
-
-    warm = spark.read.parquet(f"{sf_dir}/region.parquet")
-    warm.crossJoin(
-        F.broadcast(warm.select(F.col("r_regionkey").alias("k")))
-    ).groupBy("k").count().collect()
-    spark.range(32, numPartitions=32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).count()
+    # bench.py's warm-up, so the first query checked does not absorb
+    # session startup in its number.
+    warmup(spark, sf_dir)
 
     from concurrent.futures import ThreadPoolExecutor
 

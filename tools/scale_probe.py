@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -104,23 +103,17 @@ def main() -> None:
         sfs = args[i + 1].split(",")
         args = args[:i] + args[i + 2:]
     runs = int(args[0]) if args else 2
-    import __spark_entry__ as entrymod
-    from retail_sales_project_bigdata_spark.registry import query_scope
+    from retail_sales_project_bigdata_spark.profiling import profile_query
     from retail_sales_project_bigdata_spark.session import get_spark
 
     spark = get_spark("scale_probe")
-    queries = entrymod.queries()
 
     def run_once(name: str, sf_dir: str) -> float:
-        # same discipline as bench.py: the scope releases what the query
-        # persisted, so caches cannot accumulate and stall allocation
-        # (GCLocker) in a long in-process sweep.
-        with query_scope(spark):
-            t = time.time()
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return time.time() - t
+        # bench.py's query time.  profile_query's scope releases what the
+        # query persisted, so caches cannot accumulate and stall
+        # allocation (GCLocker) in a long in-process sweep.
+        prof = profile_query(spark, name, sf_dir)
+        return prof["build_sec"] + prof["wall_sec"]
 
     probes = (
         [(n, s) for n, s in PROBES if n in only]
@@ -147,8 +140,9 @@ def main() -> None:
     out = [
         "# SCALING — headline-query runtime across 10x data steps",
         "",
-        "Generated by `tools/scale_probe.py` (warm runs, min of N, noop",
-        "sink, local[32]).  `r{i}` = time ratio of step i+1 over step i —",
+        "Generated by `tools/scale_probe.py` (warm runs, min of N, build",
+        "+ execution through `profiling.profile_query`, local[32]).",
+        "`r{i}` = time ratio of step i+1 over step i —",
         "each data step is 10x (the sf1 step is the locally synthesized",
         "10x derivative of sf0.1; tools/gen_sf1.py).  Reading: ratio ~1 =",
         "fixed overhead dominates (amortizes on a cluster); ratio <= ~10 =",
