@@ -112,6 +112,7 @@ def main(argv: list[str] | None = None) -> int:
             print(name)
         return 0
 
+    from retail_sales_project_bigdata_spark.operators import baskets, churn
     from retail_sales_project_bigdata_spark.registry import query_scope
     from retail_sales_project_bigdata_spark.session import get_spark
 
@@ -119,8 +120,14 @@ def main(argv: list[str] | None = None) -> int:
         f"cli_{args.job}",
         master=f"local[{args.cpus}]" if args.cpus else None,
     )
-    with query_scope(spark):
-        return _run_job(args, spark)
+    # The churn and baskets jobs set these module constants from their
+    # flags; the rest of the process keeps the defaults.
+    defaults = churn.REPURCHASE_WINDOW_DAYS, baskets.MIN_SUPPORT
+    try:
+        with query_scope(spark):
+            return _run_job(args, spark)
+    finally:
+        churn.REPURCHASE_WINDOW_DAYS, baskets.MIN_SUPPORT = defaults
 
 
 def _run_job(args: argparse.Namespace, spark) -> int:

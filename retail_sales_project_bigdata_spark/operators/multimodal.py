@@ -13,8 +13,13 @@ for media pipelines at 100 TB:
   fake decoder derived from the payload bytes, clearly marked.  The
   Spark-side plumbing — schema, partitioning, UDF signature, batch
   shape — is real and tested.
-- ``maxRecordsPerBatch`` bounds Arrow batch memory (media rows are MBs,
-  not bytes — the default 10k-row batches would OOM an executor at scale).
+- Spark's own ``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MiB by
+  default) bounds each JVM→Python Arrow batch by bytes, on whatever
+  session the caller passes.  Media rows are MBs at scale, where the
+  10,000-row ``maxRecordsPerBatch`` default alone would ship GB-sized
+  batches; the byte cap cuts those to tens of rows, while small-payload
+  corpora still get 10,000-row batches.  The target is Spark's 64 MiB,
+  not the 32 MiB an earlier per-table row-count estimate aimed at.
 
 The synthetic corpus derives a binary payload from ``documents.text``
 (deterministic, so the oracle-checked metadata query has a DuckDB analog).
@@ -22,7 +27,6 @@ The synthetic corpus derives a binary payload from ``documents.text``
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Iterator
 
 import pandas as pd
@@ -33,103 +37,18 @@ from pyspark.sql import functions as F
 from retail_sales_project_bigdata_spark.functions import pround
 from retail_sales_project_bigdata_spark.sources import fan_out, read_table
 
-# Arrow batch sizing for wide binary rows: target bytes per JVM→Python
-# Arrow batch, converted to a row count from the table's MEASURED average
-# payload size (clamped).  At production media sizes (MBs/row) this
-# lands near tens of rows; on the synthetic ~100-byte payloads it stays
-# near Spark's default, so narrow-row queries in the same session are
-# not punished.  Scoping (VERDICT r1/ADVICE fix): the clamp lives on a
-# CLONED SparkSession (``newSession()`` — isolated SQLConf, shared
-# SparkContext/builder defaults).  A Dataset executes under the session
-# that created it, so building the media frame from the clone applies
-# the clamp at action time while the caller's session conf is never
-# touched (tests assert the parent value is unchanged).
-ARROW_TARGET_BATCH_BYTES = 32 << 20
-ARROW_ROWS_MIN, ARROW_ROWS_MAX = 64, 10_000
-
-# One media-scoped clone per (parent session, modality).  Keyed by the
-# parent session OBJECT in a WeakKeyDictionary (not ``id(spark)``): entries
-# evict when the parent session is garbage-collected, so a recycled id()
-# can never hand a new session a stale clone.  Keyed by modality because
-# Spark reads ``maxRecordsPerBatch`` at EXECUTION time, not frame-build
-# time — with one shared clone, two media frames built before either
-# executes (e.g. an image resize and a video frame-sample) would both run
-# with the last writer's batch size; a clone per modality makes the
-# per-modality sizing stick to the frame that asked for it.
-_MEDIA_SESSIONS: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[str, SparkSession]]"
-) = weakref.WeakKeyDictionary()
-
-
-def _media_session(spark: SparkSession, modality: str = "*") -> SparkSession:
-    per_modality = _MEDIA_SESSIONS.get(spark)
-    if per_modality is None:
-        per_modality = {}
-        _MEDIA_SESSIONS[spark] = per_modality
-    clone = per_modality.get(modality)
-    if clone is None:
-        clone = spark.newSession()
-        per_modality[modality] = clone
-    return clone
-
-
-# Memoized Arrow batch sizing per (clone session, sf_dir, modality): the
-# sizing aggregate is one extra Spark job per media query otherwise — six
-# media queries in a gate sweep paid it six times for the same answer.
-# Keyed by modality so a single-modality op sizes its batches from ITS
-# payload distribution (on a corpus where video payloads dwarf images,
-# the all-modality average would undershoot the image path's target).
-# A WeakKeyDictionary on the CLONE session object (not ``id(clone)``):
-# entries evict with their session, so a recycled id() can never serve a
-# batch size computed for dead-session state.  This and _MEDIA_SESSIONS
-# are the only cross-query memos the package keeps: both hold plain
-# values (an int, session clones) and no Spark storage, so
-# registry.query_scope has nothing of theirs to release, and dropping
-# them would put the sizing job back on every media query (resize_media
-# is a benchmarked op).
-_ARROW_ROWS_CACHE: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], int]]"
-) = weakref.WeakKeyDictionary()
-
-
-def _arrow_rows_for(
-    media: DataFrame,
-    scoped: SparkSession | None = None,
-    cache_key: tuple[str, str] | None = None,
-) -> int:
-    per_session = (
-        _ARROW_ROWS_CACHE.setdefault(scoped, {})
-        if scoped is not None
-        else {}
-    )
-    if cache_key is not None and cache_key in per_session:
-        return per_session[cache_key]
-    avg = media.agg(F.avg("payload_bytes")).first()[0] or 1.0
-    rows = int(ARROW_TARGET_BATCH_BYTES / max(avg, 1.0))
-    rows = max(ARROW_ROWS_MIN, min(ARROW_ROWS_MAX, rows))
-    if cache_key is not None:
-        per_session[cache_key] = rows
-    return rows
-
 
 def _media_source(
     spark: SparkSession, sf_dir: str, modality: str | None = None
 ) -> DataFrame:
-    """The clamped media frame every Arrow op starts from: cloned session
-    (batch-size conf isolated from the caller AND from other modalities),
-    memoized batch sizing, and — when an op consumes ONE modality — the
-    modality filter applied BEFORE the Python boundary, so the decode step
-    never ships or decodes payloads the op will drop (the manual analog of
-    predicate pushdown, which cannot cross a mapInPandas)."""
-    mod_key = modality or "*"
-    scoped = _media_session(spark, mod_key)
-    media = media_table(scoped, sf_dir)
+    """The media frame every Arrow op starts from, on the caller's
+    session.  When an op consumes ONE modality, the modality filter runs
+    BEFORE the Python boundary, so the decode step never ships or decodes
+    payloads the op will drop (the manual analog of predicate pushdown,
+    which cannot cross a mapInPandas)."""
+    media = media_table(spark, sf_dir)
     if modality is not None:
         media = media.filter(F.col("modality") == modality)
-    scoped.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
-        str(_arrow_rows_for(media, scoped, (sf_dir, mod_key))),
-    )
     return media
 
 

@@ -144,32 +144,43 @@ def _cache_entries(cache_manager) -> list:
     return [entries.apply(i) for i in range(entries.size())]
 
 
+def _temp_views(jsession) -> set[str]:
+    """Names of the session's local temp views."""
+    names = jsession.sessionState().catalog().getTempViewNames()
+    return {names.apply(i) for i in range(names.size())}
+
+
 @contextmanager
 def query_scope(spark: SparkSession) -> Iterator[None]:
-    """Release every cache entry and persisted RDD created inside.
+    """Release every temp view, cache entry and persisted RDD created
+    inside.
 
     Builders persist and localCheckpoint the frames their returned
-    DataFrame reads, so only the caller that builds AND acts can free
-    them::
+    DataFrame reads, and register temp views it reads (the SQL-API
+    query's views, each streaming query's memory-sink view), so only the
+    caller that builds AND acts can free them::
 
         with registry.query_scope(spark):
             df = queries()[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
 
-    On exit, also when the body raises, every ``CacheManager`` entry and
-    every persistent RDD that did not exist when the scope opened is
-    dropped.  What existed before stays, including the buffers a
-    pre-existing cache entry first fills inside the scope.  Do not read
-    a frame built inside after the scope closes: its cached and
-    checkpointed inputs are gone."""
+    On exit, also when the body raises, every temp view of ``spark``,
+    every ``CacheManager`` entry and every persistent RDD that did not
+    exist when the scope opened is dropped.  What existed before stays,
+    including the buffers a pre-existing cache entry first fills inside
+    the scope.  Do not read a frame built inside after the scope closes:
+    its views and its cached and checkpointed inputs are gone."""
     jsession = spark._jsparkSession
     cache_manager = jsession.sharedState().cacheManager()
     jsc = spark.sparkContext._jsc
+    views_before = _temp_views(jsession)
     entries_before = set(_cache_entries(cache_manager))
     rdds_before = set(jsc.getPersistentRDDs().keySet())
     try:
         yield
     finally:
+        for view in _temp_views(jsession) - views_before:
+            spark.catalog.dropTempView(view)
         for entry in _cache_entries(cache_manager):
             if entry not in entries_before:
                 cache_manager.uncacheQuery(jsession, entry.plan(), False, False)

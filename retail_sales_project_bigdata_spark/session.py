@@ -27,7 +27,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-appropriate defaults.
+    """Return the live SparkSession unchanged, or build one with
+    scale-appropriate defaults.
+
+    The arguments and defaults below apply only when this call creates
+    the session.  A live session keeps its conf: re-applying the builder
+    options through ``getOrCreate`` would reset what its owner set (say,
+    ``spark.sql.shuffle.partitions``) under every other user of it.
 
     AQE handles runtime re-planning (partition coalescing, skew joins,
     broadcast conversion) so the same logical plans survive a 100× scale-up:
@@ -35,6 +41,9 @@ def get_spark(
     same code runs with ``spark.sql.shuffle.partitions`` sized by the
     submitter and AQE splitting skewed partitions.
     """
+    live = SparkSession._instantiatedSession  # Builder.getOrCreate's check
+    if live is not None and live._sc._jsc is not None:
+        return live
     builder = (
         SparkSession.builder.appName(app_name)
         # local-mode heap: the ONE driver JVM hosts all executor threads,

@@ -87,7 +87,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_STATE_PARTITIONS = 8
 
 
-def _run_to_memory(agg: DataFrame, mode: str) -> tuple[str, object]:
+def _run_to_memory(agg: DataFrame, mode: str) -> str:
+    """Drain the bounded stream into a memory sink and return the name
+    of the temp view that holds its output (``registry.query_scope``
+    drops the view with the query's other state)."""
     name = f"stream_out_{next(_counter)}"
     spark = agg.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -108,7 +111,7 @@ def _run_to_memory(agg: DataFrame, mode: str) -> tuple[str, object]:
         if q is not None:
             q.stop()  # always release stream state, even on failure
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return name, q
+    return name
 
 
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -125,7 +128,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         pround(F.sum("value"), 4).alias("total_value"),
     )
-    name, _ = _run_to_memory(agg, "complete")
+    name = _run_to_memory(agg, "complete")
     return spark.table(name).select(
         F.col("win.start").alias("hour_start"),
         "event_type",
@@ -158,7 +161,7 @@ def streaming_sliding_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             pround(F.sum("value"), 4).alias("total_value"),
         )
     )
-    name, _ = _run_to_memory(agg, "append")
+    name = _run_to_memory(agg, "append")
     return spark.table(name).select(
         F.col("win.start").alias("window_start"),
         F.col("win.end").alias("window_end"),
@@ -176,7 +179,7 @@ def streaming_user_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         pround(F.sum("value"), 4).alias("total_value"),
     )
-    name, _ = _run_to_memory(agg, "complete")
+    name = _run_to_memory(agg, "complete")
     return spark.table(name)
 
 
@@ -245,7 +248,7 @@ def streaming_stateful_user_sessions(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name, _ = _run_to_memory(agg, "update")
+    name = _run_to_memory(agg, "update")
     # keep the final (largest n_events) state row per user
     from pyspark.sql.window import Window
 
@@ -305,7 +308,7 @@ def streaming_purchase_view_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gap_us"
         ),
     )
-    name, _ = _run_to_memory(out, "append")
+    name = _run_to_memory(out, "append")
     return spark.table(name)
 
 
@@ -352,7 +355,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    name, _ = _run_to_memory(out, "append")
+    name = _run_to_memory(out, "append")
     return spark.table(name)
 
 
@@ -382,7 +385,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             pround(F.sum("value"), 4).alias("total_value"),
         )
     )
-    name, _ = _run_to_memory(agg, "append")
+    name = _run_to_memory(agg, "append")
     return spark.table(name).select(
         "user_id",
         F.unix_micros("sw.start").alias("start_us"),
@@ -419,7 +422,7 @@ def streaming_segment_event_counts(
             pround(F.sum("value"), 4).alias("total_value"),
         )
     )
-    name, _ = _run_to_memory(agg, "complete")
+    name = _run_to_memory(agg, "complete")
     return spark.table(name).select(
         "c_mktsegment", "event_type", "n_events", "total_value"
     )
@@ -641,7 +644,7 @@ def streaming_corpus_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("is_quality") == 1, F.col("n_tokens")).otherwise(0)
         ).alias("quality_tokens"),
     )
-    name, _ = _run_to_memory(agg, "complete")
+    name = _run_to_memory(agg, "complete")
     return spark.table(name)
 
 
@@ -776,7 +779,7 @@ def streaming_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name, _ = _run_to_memory(agg, "update")
+    name = _run_to_memory(agg, "update")
     # update mode re-emits a query's snapshot whenever its state changes;
     # the row set with the LARGEST n_seen is the final top-k per query
     from pyspark.sql.window import Window
@@ -843,7 +846,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("novel"),
         (F.col("n_rows") - F.size("_fps")).alias("dup_in_batch"),
     )
-    name, _ = _run_to_memory(out, "complete")
+    name = _run_to_memory(out, "complete")
     return spark.table(name)
 
 
@@ -1041,7 +1044,7 @@ def streaming_incremental_near_dup(
         pround("_best.j", 6).alias("best_jaccard"),
     )
     try:
-        name, _ = _run_to_memory(out, "complete")
+        name = _run_to_memory(out, "complete")
     finally:
         index.unpersist()
     return spark.table(name)

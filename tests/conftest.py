@@ -56,18 +56,28 @@ def cache_entry_count(spark) -> int:
     )
 
 
+def temp_view_names(spark) -> set[str]:
+    # the session catalog directly: ``spark.catalog.listTables()`` costs
+    # ~0.1 s a call, which would add over a minute to the suite
+    views = spark._jsparkSession.sessionState().catalog().listLocalTempViews("*")
+    return {views.apply(i).table() for i in range(views.size())}
+
+
 @contextmanager
 def released_scope(spark):
     """Run the body in ``registry.query_scope`` and assert that it left
-    no persistent RDD and no cache entry behind.  RDDs are compared as
-    id sets, not counts: the ContextCleaner may drop older RDDs while
-    the body runs."""
+    no temp view, no persistent RDD and no cache entry behind.  RDDs are
+    compared as id sets, not counts: the ContextCleaner may drop older
+    RDDs while the body runs."""
     from retail_sales_project_bigdata_spark.registry import query_scope
 
+    views_before = temp_view_names(spark)
     rdds_before = persistent_rdd_ids(spark)
     entries_before = cache_entry_count(spark)
     with query_scope(spark):
         yield
+    views_left = temp_view_names(spark) - views_before
+    assert not views_left, f"temp views created inside and left: {views_left}"
     left = persistent_rdd_ids(spark) - rdds_before
     assert not left, f"persistent RDDs created inside and left: {sorted(left)}"
     assert cache_entry_count(spark) == entries_before

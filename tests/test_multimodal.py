@@ -80,8 +80,8 @@ def test_media_stats_cover_modalities(spark):
 
 
 def test_decode_media_does_not_leak_arrow_conf(spark):
-    """ADVICE r1: the per-media-query Arrow batch clamp must live on the
-    scoped clone session, never on the caller's session."""
+    """Media ops set no Arrow conf: the caller's session keeps its own
+    batch settings after a media query runs."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(key)
     from retail_sales_project_bigdata_spark.operators.multimodal import (
@@ -89,7 +89,7 @@ def test_decode_media_does_not_leak_arrow_conf(spark):
     )
 
     df = decode_media(spark, SF_SMALL)
-    assert df.count() > 0  # action runs under the clone's conf
+    assert df.count() > 0
     assert spark.conf.get(key) == before
 
 
@@ -175,90 +175,42 @@ def test_image_phash_pairs_crafted_near_dups(spark):
     assert all(3 not in pair for pair in got)  # unrelated image excluded
 
 
-def test_media_session_cache_evicts_with_parent(spark):
-    """Two distinct parent sessions never share a clone, and the cache
-    entry evicts when its parent session object is garbage-collected
-    (guards against id() reuse handing a new session a stale clone)."""
-    import gc
-
-    from retail_sales_project_bigdata_spark.operators import multimodal as mm
-
-    clone_a = mm._media_session(spark)
-    assert clone_a is not spark
-    assert mm._media_session(spark) is clone_a  # memoized per parent
-
-    other = spark.newSession()
-    clone_b = mm._media_session(other)
-    assert clone_b is not clone_a  # distinct parents -> distinct clones
-
-    before = len(mm._MEDIA_SESSIONS)
-    del other, clone_b
-    gc.collect()
-    assert len(mm._MEDIA_SESSIONS) < before  # weak key evicted
-    assert mm._media_session(spark) is clone_a  # survivor untouched
-
-
-def test_media_session_per_modality_batch_isolation(spark):
-    """ADVICE r5: Spark reads maxRecordsPerBatch at EXECUTION time, so two
-    media frames built before either runs must not share one clone — each
-    modality gets its own clone session and keeps its own batch size."""
-    from retail_sales_project_bigdata_spark.operators import multimodal as mm
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    img = mm._media_source(spark, SF_SMALL, "image")
-    img_session = mm._media_session(spark, "image")
-    img_rows = img_session.conf.get(key)
-    vid = mm._media_source(spark, SF_SMALL, "video")  # built BEFORE img runs
-    vid_session = mm._media_session(spark, "video")
-    assert vid_session is not img_session
-    # the video probe must not have rewritten the image clone's conf
-    assert img_session.conf.get(key) == img_rows
-    assert img.count() > 0 and vid.count() > 0
-
-
-def test_arrow_rows_cache_evicts_with_clone_session(spark):
-    """ADVICE r5: the batch-size memo keys on the clone session OBJECT
-    (weakly), so a dead session's entry evicts instead of aliasing a
-    recycled id()."""
-    import gc
-    import weakref
-
-    from pyspark.sql import SparkSession
-
-    from retail_sales_project_bigdata_spark.operators import multimodal as mm
-
-    parent = spark.newSession()
-    mm._media_source(parent, SF_SMALL, "audio")
-    clone = mm._media_session(parent, "audio")
-    assert (SF_SMALL, "audio") in mm._ARROW_ROWS_CACHE[clone]
-    before = len(mm._ARROW_ROWS_CACHE)
-    ref = weakref.ref(clone)
-    # SparkSession.__init__ pins each new session twice: as the thread's
-    # active session AND in the RDD.toDF monkey-patch closure (pyspark's
-    # _monkey_patch_RDD captures the latest session).  Displace both so
-    # the clone can actually die.
-    spark.newSession()
-    SparkSession._activeSession = spark
-    del parent, clone
-    gc.collect()
-    assert ref() is None  # the clone itself was collected
-    assert len(mm._ARROW_ROWS_CACHE) < before  # entry evicted with it
-
-
-def test_arrow_rows_cache_survives_clear_session_memos(spark):
-    """The batch-size memo is a table measurement, not pipeline state:
-    registry.clear_session_memos (bench between-runs reset) must leave it
-    alone so warm re-times do not re-pay the sizing probe."""
-    from retail_sales_project_bigdata_spark.operators import multimodal as mm
-    from retail_sales_project_bigdata_spark.registry import (
-        clear_session_memos,
+def test_media_batches_bounded_by_arrow_bytes(spark):
+    """Spark's own Arrow byte cap bounds media batches on the session
+    the caller passes: with ``maxBytesPerBatch`` lowered to 4 KiB every
+    partition splits into several batches, none carries more payload
+    than the cap plus one row, and decoding returns the same rows as
+    under the default cap."""
+    from retail_sales_project_bigdata_spark.operators.multimodal import (
+        _media_source,
     )
 
-    mm._media_source(spark, SF_SMALL, "image")
-    clone = mm._media_session(spark, "image")
-    assert mm._ARROW_ROWS_CACHE[clone]
-    clear_session_memos()
-    assert mm._ARROW_ROWS_CACHE[clone]  # not a *_CACHE plain dict
+    cap = 4096
+    s = spark.newSession()
+    s.conf.set("spark.sql.execution.arrow.maxBytesPerBatch", str(cap))
+    media = _media_source(s, SF_SMALL)
+
+    def batch_sizes(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "n_rows": [len(pdf)],
+                    "n_bytes": [int(pdf["payload"].map(len).sum())],
+                }
+            )
+
+    got = media.mapInPandas(
+        batch_sizes, schema="n_rows long, n_bytes long"
+    ).collect()
+    largest = media.agg(F.max("payload_bytes")).first()[0]
+    assert sum(r.n_rows for r in got) == 500
+    assert len(got) > media.rdd.getNumPartitions()
+    assert max(r.n_bytes for r in got) <= cap + largest
+    assert sorted(decode_media(s, SF_SMALL).collect()) == sorted(
+        decode_media(spark, SF_SMALL).collect()
+    )
 
 
 def test_decode_batches_real_codec_gate(monkeypatch):

@@ -105,17 +105,13 @@ def test_embedding_sizing_reads_the_footer(spark, name):
     assert profile_query(spark, name, SF_SMALL)["build_jobs"] == 0
 
 
-def test_cli_profile_prints_one_record_per_name(spark, capsys, monkeypatch):
+def test_cli_profile_prints_one_record_per_name(spark, capsys):
     """``profile rfm rfm`` warms up once, then prints one
     ``profile_query`` record per name: a cold run and a warm run."""
     import json
 
     from retail_sales_project_bigdata_spark import __main__ as cli
-    from retail_sales_project_bigdata_spark import session
 
-    # get_spark on a live session would reset its shuffle width for
-    # every later test.
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
     assert cli.main(["--sf-dir", SF_SMALL, "profile", "rfm", "rfm"]) == 0
     lines = capsys.readouterr().out.splitlines()
     assert len(lines) == 2

@@ -9,7 +9,11 @@ import types
 import pytest
 
 from retail_sales_project_bigdata_spark import registry
-from tests.conftest import cache_entry_count, persistent_rdd_ids
+from tests.conftest import (
+    cache_entry_count,
+    persistent_rdd_ids,
+    temp_view_names,
+)
 
 
 def _module(name: str, queries=(), oracles=()) -> types.ModuleType:
@@ -105,3 +109,16 @@ def test_query_scope_keeps_a_frame_cached_before_it(spark):
     finally:
         kept.unpersist(blocking=True)
     assert not persistent_rdd_ids(spark) & filled
+
+
+def test_query_scope_drops_only_temp_views_created_inside(spark):
+    spark.range(3).createOrReplaceTempView("scope_kept_view")
+    try:
+        with registry.query_scope(spark):
+            spark.range(5).createOrReplaceTempView("scope_inner_view")
+            assert spark.table("scope_inner_view").count() == 5
+        views = temp_view_names(spark)
+        assert "scope_inner_view" not in views
+        assert "scope_kept_view" in views
+    finally:
+        spark.catalog.dropTempView("scope_kept_view")

@@ -76,7 +76,7 @@ def test_events_stream_reads_nanos_file_per_read(spark, tmp_path):
     stream = _events_stream(spark, sf_dir).select(
         "event_id", F.unix_micros("ts").alias("ts_us")
     )
-    name, _ = _run_to_memory(stream, "append")
+    name = _run_to_memory(stream, "append")
     got = spark.table(name).orderBy("event_id").collect()
     assert [r.ts_us for r in got] == micros.tolist()
     assert spark.conf.get(NANOS_CONF, None) is None
