@@ -81,6 +81,15 @@ def _in_job_group(sc, label: str, fn):
     return out, wall, sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far:
+    one per generated-class cache miss (``CodegenMetrics``' compile-time
+    histogram count).  JVM-wide, so a delta over a span also counts what
+    other threads compiled in it."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def profile_df(df: DataFrame, label: str = "profile") -> dict[str, object]:
     """Materialize ``df`` (distributed count over its own query execution
     — full execution, no rows to the driver) inside a fresh job group and
@@ -128,7 +137,9 @@ def profile_query(
     fits, deliberate ``collect()``s).  Building and executing share one
     ``registry.query_scope``, so the query leaves nothing persisted; its
     release runs after both timed spans.  ``build_sec + wall_sec`` is the
-    query time bench.py records."""
+    query time bench.py records.  ``codegen_compiles`` counts the classes
+    compiled over build and execution; a query shape that already ran in
+    this JVM reads 0 (see ``session.get_spark``'s generated-class cache)."""
     from retail_sales_project_bigdata_spark.registry import (
         queries,
         query_scope,
@@ -141,6 +152,7 @@ def profile_query(
             "retail_sales_project_bigdata_spark list`"
         )
     with query_scope(spark):
+        compiles_before = codegen_compiles(spark)
         df, build_wall, build_jobs = _in_job_group(
             spark.sparkContext,
             f"{name}-build",
@@ -150,4 +162,5 @@ def profile_query(
             **profile_df(df, label=name),
             "build_sec": round(build_wall, 3),
             "build_jobs": len(build_jobs),
+            "codegen_compiles": codegen_compiles(spark) - compiles_before,
         }

@@ -4,11 +4,17 @@ The reference creates bare sessions per job
 (``FullPreprocessingPipeline.java:34-36``, ``ChurnPrediction.java:44-49``).
 The rebuild centralizes session construction with scale-aware defaults:
 AQE (runtime coalescing + skew-join splitting), UTC session timezone (oracle
-parity with DuckDB), Arrow for any pandas exchange, and shuffle parallelism
-sized to the machine instead of Spark's default 200.
+parity with DuckDB), Arrow for any pandas exchange, shuffle parallelism
+sized to the machine instead of Spark's default 200, and a generated-class
+cache (``spark.sql.codegen.cache.maxEntries``) that holds every class one
+pass over the registry compiles, so a query shape that runs again reuses
+its classes instead of recompiling them.
 
 On a real cluster the same factory applies — only ``master`` and the memory
-settings come from spark-submit instead.
+settings come from spark-submit instead.  Static confs (the driver heap,
+the generated-class cache size) take effect only when this factory
+launches the JVM; a ``spark-submit`` owner sets them on its own command
+line.
 """
 
 from __future__ import annotations
@@ -68,6 +74,23 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # Spark keeps compiled whole-stage and expression classes in one
+        # JVM-wide LRU keyed by their source (static conf, default 100).
+        # The 9 retail reports alone need ~135, so at the default every
+        # warm pass recompiled all of them.  One pass over the whole
+        # registry at sf0.01 (profiling.profile_query per query, local[4])
+        # compiled 2,777 distinct classes; later passes compiled 27-33
+        # more, from 11 queries whose generated code differs between
+        # runs.  4096 holds that with room for the registry to
+        # grow.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # A whole-stage class is named after its codegen stage id, and
+        # AQE numbers stages in the order their inputs finish, which
+        # varies from run to run: the same pipeline then compiles again
+        # under a new name (rfm recompiled 4 of its 25 classes on some
+        # warm runs; the registry pass's distinct count was 3,254 with
+        # the id in the name, 2,777 without).
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # InferFiltersFromGenerate clones the generator's child expression
         # into a pre-Generate Filter (size(e)>0 AND isnotnull(e)).  When
         # that child is a higher-order function (shingling: transform over

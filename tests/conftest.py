@@ -47,7 +47,9 @@ def assert_oracle_match(spark_df, duck_con, sql: str) -> None:
 
 
 def persistent_rdd_ids(spark) -> set[int]:
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    # toArray(): iterating the key set ends in a Java exception that
+    # pyspark's error conversion inspects, ~17 ms a read
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
 def cache_entry_count(spark) -> int:

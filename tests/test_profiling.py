@@ -120,3 +120,41 @@ def test_cli_profile_prints_one_record_per_name(spark, capsys):
         assert prof["label"] == "rfm"
         assert prof["build_jobs"] == 0
         assert prof["failed_tasks"] == 0
+    # the warm run reuses every class the cold run compiled
+    assert json.loads(lines[1])["codegen_compiles"] == 0
+
+
+# perfbench's retail_reports ops: ~135 generated classes, more than
+# Spark's default generated-class cache of 100 entries holds
+RETAIL_REPORTS = (
+    "clean_lineitem",
+    "rfm",
+    "top_products",
+    "pricing_summary",
+    "baskets_flat",
+    "weekly_demand",
+    "household_penetration",
+    "cohort_rates",
+    "sales_by_region",
+)
+
+
+def test_warm_pass_compiles_no_classes(spark):
+    """A second pass over the retail reports, each built and run in its
+    own query scope, reuses the classes the first pass compiled.  With
+    Spark's default cache size every warm pass recompiled all of them."""
+    from retail_sales_project_bigdata_spark.profiling import codegen_compiles
+    from retail_sales_project_bigdata_spark.registry import queries, query_scope
+
+    qs = queries()
+
+    def one_pass() -> int:
+        before = codegen_compiles(spark)
+        for name in RETAIL_REPORTS:
+            with query_scope(spark):
+                df = qs[name](spark, SF_SMALL)
+                df.write.format("noop").mode("overwrite").save()
+        return codegen_compiles(spark) - before
+
+    one_pass()
+    assert one_pass() == 0
