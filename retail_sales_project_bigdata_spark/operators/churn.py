@@ -202,13 +202,12 @@ def _pair_window_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         tx.withColumn("rn", F.row_number().over(wo))
         .withColumn("first_day", first_day)
-        .withColumn("in_win", in_win)
-        .withColumn(
-            "n_repurchases", F.sum(F.col("in_win").cast("long")).over(w)
-        )
-        .withColumn(
-            "first_repurchase_day",
-            F.min(F.when(F.col("in_win"), F.col("day"))).over(w),
+        .withColumns(
+            {
+                "in_win": in_win,
+                "n_repurchases": F.sum(in_win.cast("long")).over(w),
+                "first_repurchase_day": F.min(F.when(in_win, F.col("day"))).over(w),
+            }
         )
     )
 

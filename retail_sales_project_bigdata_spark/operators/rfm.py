@@ -66,10 +66,12 @@ def rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_day = per_cust.agg(
         F.max("last_purchase_day").alias("global_max_day")
     )
-    return (
-        per_cust.crossJoin(F.broadcast(max_day))
-        .withColumn("recency", F.col("global_max_day") - F.col("last_purchase_day"))
-        .select("o_custkey", "recency", "frequency", "monetary", "last_purchase_day")
+    return per_cust.crossJoin(F.broadcast(max_day)).select(
+        "o_custkey",
+        (F.col("global_max_day") - F.col("last_purchase_day")).alias("recency"),
+        "frequency",
+        "monetary",
+        "last_purchase_day",
     )
 
 

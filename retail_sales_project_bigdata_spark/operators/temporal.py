@@ -31,18 +31,14 @@ from retail_sales_project_bigdata_spark.sources import read_table
 
 
 def weekly_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (
-        read_table(spark, sf_dir, "lineitem")
-        .withColumn("day", day_index("l_shipdate"))
-        .withColumn("week_no", week_no("day"))
-        .withColumn("net_sales", net_sales())
-        .withColumn(
-            "unit_price", safe_div(F.col("l_extendedprice"), F.col("l_quantity"))
-        )
-        .withColumn(
-            "is_discounted", F.when(F.col("l_discount") > 0, 1).otherwise(0)
-        )
-        .withColumn("campaign_flag", F.when(F.col("l_tax") > 0, 1).otherwise(0))
+    li = read_table(spark, sf_dir, "lineitem").withColumns(
+        {
+            "week_no": week_no(day_index("l_shipdate")),
+            "net_sales": net_sales(),
+            "unit_price": safe_div(F.col("l_extendedprice"), F.col("l_quantity")),
+            "is_discounted": F.when(F.col("l_discount") > 0, 1).otherwise(0),
+            "campaign_flag": F.when(F.col("l_tax") > 0, 1).otherwise(0),
+        }
     )
     return li.groupBy(
         F.col("l_suppkey").alias("store_id"),

@@ -1,11 +1,12 @@
 """Query profiling: run a registered query and report where the time and
 tasks went — the ``.explain and iterate`` loop's runtime half.
 
-``profile_query`` builds the DataFrame and executes its plan, each under
-a dedicated job group, then reads the driver's status tracker for the
-jobs/stages/tasks each group launched, and pairs that with facts read
-from the *finalized* physical plan (:func:`plans.plan_facts`: exchanges,
-joins, python nodes, codegen spans).
+``profile_query`` builds the DataFrame, counting the jobs the DAG
+scheduler was handed meanwhile, then executes its plan under a dedicated
+job group, reads the driver's status tracker for the jobs/stages/tasks
+that group launched, and pairs that with facts read from the
+*finalized* physical plan (:func:`plans.plan_facts`: exchanges, joins,
+python nodes, codegen spans).
 Execution goes through the DataFrame's own ``queryExecution`` (via
 ``toRdd().count()``, a distributed count — nothing is collected to the
 driver), because a ``df.write`` action compiles a *separate* query
@@ -90,6 +91,15 @@ def codegen_compiles(spark: SparkSession) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def jobs_submitted(spark: SparkSession) -> int:
+    """Jobs submitted to this JVM's DAG scheduler so far, from any thread
+    and any job group: a streaming query runs its micro-batch jobs on its
+    own thread under its own group, which a job-group lookup misses.
+    JVM-wide, so a delta over a span also counts what other threads
+    submitted in it."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
 def profile_df(df: DataFrame, label: str = "profile") -> dict[str, object]:
     """Materialize ``df`` (distributed count over its own query execution
     — full execution, no rows to the driver) inside a fresh job group and
@@ -131,10 +141,13 @@ def profile_query(
 ) -> dict[str, object]:
     """Profile a registered query by name (see ``registry.queries``).
 
-    The builder also runs under its own job group, so ``build_sec`` and
-    ``build_jobs`` report the construction layer: every Spark job a
-    builder runs before it returns its DataFrame (convergence loops, ML
-    fits, deliberate ``collect()``s).  Building and executing share one
+    ``build_sec`` and ``build_jobs`` report the construction layer: every
+    Spark job a builder runs before it returns its DataFrame (convergence
+    loops, ML fits, deliberate ``collect()``s, the micro-batches of a
+    stream it drives to completion).  ``build_jobs`` is a delta of
+    :func:`jobs_submitted`, so it is JVM-wide: exact for callers that
+    profile one query at a time, as bench.py, the CLI and the tools do.
+    Building and executing share one
     ``registry.query_scope``, so the query leaves nothing persisted; its
     release runs after both timed spans.  ``build_sec + wall_sec`` is the
     query time bench.py records.  ``codegen_compiles`` counts the classes
@@ -153,14 +166,14 @@ def profile_query(
         )
     with query_scope(spark):
         compiles_before = codegen_compiles(spark)
-        df, build_wall, build_jobs = _in_job_group(
-            spark.sparkContext,
-            f"{name}-build",
-            lambda: qs[name](spark, sf_dir),
-        )
+        jobs_before = jobs_submitted(spark)
+        t0 = time.perf_counter()
+        df = qs[name](spark, sf_dir)
+        build_wall = time.perf_counter() - t0
+        build_jobs = jobs_submitted(spark) - jobs_before
         return {
             **profile_df(df, label=name),
             "build_sec": round(build_wall, 3),
-            "build_jobs": len(build_jobs),
+            "build_jobs": build_jobs,
             "codegen_compiles": codegen_compiles(spark) - compiles_before,
         }

@@ -10,6 +10,18 @@ cache (``spark.sql.codegen.cache.maxEntries``) that holds every class one
 pass over the registry compiles, so a query shape that runs again reuses
 its classes instead of recompiling them.
 
+It also turns PySpark's DataFrame debugging off
+(``spark.python.sql.dataFrameDebugging.enabled``).  When on, PySpark's
+default, every Column and ``functions.*`` call walks the Python stack
+and adds ~10 py4j round trips to record its file and line for error
+messages: 55% of the py4j commands that building the retail reports
+sends.  Off, errors keep their class and message and lose only that
+file and line.  PySpark reads the setting once per process, so to get
+call sites back start a fresh process with
+``get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+"true"})``; a session this factory did not build keeps PySpark's
+default.
+
 On a real cluster the same factory applies — only ``master`` and the memory
 settings come from spark-submit instead.  Static confs (the driver heap,
 the generated-class cache size) take effect only when this factory
@@ -91,6 +103,13 @@ def get_spark(
         # warm runs; the registry pass's distinct count was 3,254 with
         # the id in the name, 2,777 without).
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # PySpark wraps every Column and ``functions.*`` call to record
+        # its Python call site for error messages: an active-session
+        # lookup, a conf read, a set and a clear on the JVM, and a stack
+        # walk.  Building the 9 retail reports once sent 4,832 py4j
+        # commands with it and 2,152 without (perfbench data, local[4]).
+        # Errors keep their class and message; see the module docstring.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # InferFiltersFromGenerate clones the generator's child expression
         # into a pre-Generate Filter (size(e)>0 AND isnotnull(e)).  When
         # that child is a higher-order function (shingling: transform over

@@ -158,3 +158,37 @@ def test_warm_pass_compiles_no_classes(spark):
 
     one_pass()
     assert one_pass() == 0
+
+
+def test_building_captures_no_python_call_site(spark, monkeypatch):
+    """``get_spark`` turns PySpark's DataFrame debugging off, so no
+    Column or ``functions.*`` call walks the Python stack and sets a
+    call site on the JVM.  With PySpark's default, one pass of these
+    builds captured 268 call sites."""
+    import pyspark.errors.utils as errors_utils
+
+    from retail_sales_project_bigdata_spark.registry import queries, query_scope
+
+    capture = errors_utils._capture_call_site
+    calls = []
+
+    def counting_capture(depth):
+        calls.append(depth)
+        return capture(depth)
+
+    monkeypatch.setattr(errors_utils, "_capture_call_site", counting_capture)
+    qs = queries()
+    for name in RETAIL_REPORTS:
+        with query_scope(spark):
+            qs[name](spark, SF_SMALL)
+    assert len(calls) == 0
+
+
+def test_streaming_build_counts_its_micro_batch_jobs(spark):
+    """A streaming builder drives its stream to completion; the
+    micro-batch jobs run on the stream's thread under the stream's own
+    job group, and still count as construction.  (A builder that runs no
+    job reads 0: ``test_profile_query_fields``.)"""
+    from retail_sales_project_bigdata_spark.profiling import profile_query
+
+    assert profile_query(spark, "streaming_hourly_counts", SF_SMALL)["build_jobs"] >= 1
