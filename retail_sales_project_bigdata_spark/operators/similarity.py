@@ -1865,7 +1865,8 @@ def embedding_quantize_int8_vectors(
     because the driver's correctness gate canonicalizes results with a
     pandas sort, which cannot order list cells (round-6 red row) — the
     repo convention is that gate-facing outputs carry scalar columns
-    only (asserted by ``tests/test_oracle_parity.py``).
+    only (asserted for every registry name by
+    ``tests/test_oracle_parity.py::test_query_runs``).
 
     Oracle exactness: every per-element step is a single exactly-rounded
     IEEE double op (cast, multiply, divide, floor) evaluated in the same

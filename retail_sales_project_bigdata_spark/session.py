@@ -32,6 +32,7 @@ line.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -137,15 +138,15 @@ def get_spark(
     return spark
 
 
-# SparkContext application ids that already had the package zip shipped
-# (plain set of strings — contexts are recreated with fresh ids, and a
-# dead context's leftover id costs nothing).  Guarded by _PKG_LOCK: two
-# threads racing through a first read_table would otherwise both pass
-# the membership check and addPyFile the same name twice (Spark rejects
-# a re-registration).  The zip itself is built ONCE per Python process
-# and reused across contexts; its staging dir is removed at interpreter
-# exit.
-_PKG_SHIPPED: set[str] = set()
+# SparkContexts that already had the package zip shipped, held weakly:
+# a stopped context drops out with its last reference, and asking a live
+# one for its application id would cost 2 py4j commands per read.
+# Guarded by _PKG_LOCK: two threads racing through a first read_table
+# would otherwise both pass the membership check and addPyFile the same
+# name twice (Spark rejects a re-registration).  The zip itself is built
+# ONCE per Python process and reused across contexts; its staging dir is
+# removed at interpreter exit.
+_PKG_SHIPPED: weakref.WeakSet = weakref.WeakSet()
 _PKG_ZIP_PATH: list[str] = []  # lazily-built singleton [path]
 import threading as _threading  # noqa: E402
 
@@ -205,11 +206,10 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     exit, fetched once per worker.
     """
     sc = spark.sparkContext
-    app_id = sc.applicationId
-    if app_id in _PKG_SHIPPED:
+    if sc in _PKG_SHIPPED:
         return
     with _PKG_LOCK:
-        if app_id in _PKG_SHIPPED:
+        if sc in _PKG_SHIPPED:
             return
         sc.addPyFile(_package_zip())
-        _PKG_SHIPPED.add(app_id)
+        _PKG_SHIPPED.add(sc)

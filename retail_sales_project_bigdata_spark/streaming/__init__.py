@@ -21,33 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from retail_sales_project_bigdata_spark.functions import pround
-from retail_sales_project_bigdata_spark.plans import plan_facts
 from retail_sales_project_bigdata_spark.schemas import TESTDATA_SCHEMAS
 
 _counter = itertools.count()
-
-# Facts (``plans.plan_facts``) of the last executed MICRO-BATCH physical
-# plan per memory-sink stream, captured just before the stream stops;
-# ``None`` when no micro-batch ran.  Batch plan budgets can't see these (a
-# finished streaming query returns a memory-scan table; the real plans are
-# compiled per trigger), so tests/test_streaming_plans.py asserts the same
-# scale facts — no row-at-a-time Python eval, no cartesian product — on
-# the plans that actually executed.
-LAST_MICROBATCH_FACTS: dict[str, dict[str, int] | None] = {}
-
-
-_MICROBATCH_FACTS_KEEP = 64  # bound the dict: keys are never reused, so a
-# long-lived driver (multi-run bench, repeated gate sweeps) would other-
-# wise accumulate one entry per stream forever.
-
-
-def _capture_microbatch_facts(name: str, q) -> None:
-    last = q._jsq.streamingQuery().lastExecution()
-    LAST_MICROBATCH_FACTS[name] = (
-        None if last is None else plan_facts(last.executedPlan())
-    )
-    while len(LAST_MICROBATCH_FACTS) > _MICROBATCH_FACTS_KEEP:
-        LAST_MICROBATCH_FACTS.pop(next(iter(LAST_MICROBATCH_FACTS)))
 
 # events.parquet has shipped ``ts`` both as INT64 TIMESTAMP(NANOS) — read
 # as raw nanos long — and as plain microsecond TIMESTAMP (read as
@@ -106,7 +82,6 @@ def _run_to_memory(agg: DataFrame, mode: str) -> str:
             .start()
         )
         q.processAllAvailable()
-        _capture_microbatch_facts(name, q)
     finally:
         if q is not None:
             q.stop()  # always release stream state, even on failure

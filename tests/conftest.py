@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 import sys
 from contextlib import contextmanager
+from dataclasses import dataclass
 
 import pytest
 
@@ -22,6 +23,20 @@ TABLES = list(TESTDATA_SCHEMAS)
 def spark():
     spark = get_spark("tests", shuffle_partitions=8)
     yield spark
+
+
+@pytest.fixture(autouse=True)
+def _spark_test_scope(request):
+    """Run every test that uses ``spark`` in one ``registry.query_scope``:
+    what a test caches, persists or registers does not outlive it, so a
+    later test never plans over a cached subtree an earlier one left."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    from retail_sales_project_bigdata_spark.registry import query_scope
+
+    with query_scope(request.getfixturevalue("spark")):
+        yield
 
 
 @pytest.fixture(scope="session")
@@ -83,3 +98,97 @@ def released_scope(spark):
     left = persistent_rdd_ids(spark) - rdds_before
     assert not left, f"persistent RDDs created inside and left: {sorted(left)}"
     assert cache_entry_count(spark) == entries_before
+
+
+@dataclass
+class RegistryRun:
+    """What one build of a registry query showed.  ``oracle_problems``
+    is None for a rows-only name; ``streams`` pairs each stream the
+    build started with the ``plan_facts`` of its last executed
+    micro-batch plan (None if it executed none)."""
+
+    columns: list[str]
+    complex_cols: list[str]
+    oracle_problems: list[str] | None
+    streams: list[tuple[str, dict | None]]
+
+
+_REGISTRY_RUNS: dict[str, RegistryRun] = {}
+
+
+def registry_run(spark, duck, name: str) -> RegistryRun:
+    """Build registry query ``name`` at sf0.001 once per test session.
+
+    ``test_query_runs``, ``test_oracle_parity`` and
+    ``test_microbatch_plan_within_budget`` each assert their part of the
+    result, so a query builds once however many of them check it.  The
+    build runs inside ``released_scope`` (it must leave no temp view,
+    persistent RDD or cache entry behind), collects every row of an
+    oracle name for the DuckDB comparison or five rows of a rows-only
+    name, and records every ``StreamingQuery`` it starts by wrapping
+    ``DataStreamWriter.start``: a stopped query still holds its last
+    executed micro-batch plan.  A build that raises is not kept, so
+    every test that needs it fails."""
+    run = _REGISTRY_RUNS.get(name)
+    if run is None:
+        run = _REGISTRY_RUNS[name] = _build_registry_run(spark, duck, name)
+    return run
+
+
+def _build_registry_run(spark, duck, name: str) -> RegistryRun:
+    from pyspark.sql.streaming import DataStreamWriter
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    import __spark_entry__ as entrymod
+    from retail_sales_project_bigdata_spark.plans import plan_facts
+
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from oracle_check import compare
+
+    oracles = entrymod.oracle_sql()
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        query = start(self, *args, **kwargs)
+        started.append(query)
+        return query
+
+    with pytest.MonkeyPatch.context() as mp, released_scope(spark):
+        mp.setattr(DataStreamWriter, "start", recording_start)
+        df = entrymod.queries()[name](spark, SF_SMALL)
+        complex_cols = [
+            f.name
+            for f in df.schema.fields
+            if isinstance(f.dataType, (ArrayType, MapType, StructType))
+        ]
+        if name in oracles:
+            problems = compare(df, duck.execute(oracles[name]).df(), name)
+        else:
+            problems = None
+            df.limit(5).collect()
+        columns = df.columns
+
+    streams = []
+    for query in started:
+        last = query._jsq.streamingQuery().lastExecution()
+        facts = None if last is None else plan_facts(last.executedPlan())
+        streams.append((query.name, facts))
+    return RegistryRun(columns, complex_cols, problems, streams)
+
+
+def assert_microbatch_plans_within_budget(name: str, run: RegistryRun) -> None:
+    """The batch budgets' scale facts, on the last executed micro-batch
+    plan of every stream the build started."""
+    for stream, facts in run.streams:
+        # a stream that executed ZERO micro-batches has no plan; the
+        # checks below would pass vacuously, so require one
+        assert facts is not None, (
+            f"{name}/{stream}: no micro-batch ever executed"
+        )
+        assert facts["python_eval"] == 0, (
+            f"{name}/{stream}: Python eval node in a micro-batch plan: {facts}"
+        )
+        assert facts["cartesian"] == 0, (
+            f"{name}/{stream}: cartesian product in a micro-batch plan: {facts}"
+        )

@@ -116,11 +116,10 @@ def test_incremental_near_dup_classifies_batch_against_corpus_only(
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
         f"{sf_dir}/documents.parquet"
     )
-    with query_scope(spark):  # drops the crafted corpus's shingle cache
-        out = {
-            r.doc_id: r
-            for r in incremental_near_dup_new_docs(spark, sf_dir).collect()
-        }
+    out = {
+        r.doc_id: r
+        for r in incremental_near_dup_new_docs(spark, sf_dir).collect()
+    }
     assert set(out) == {5, 10, 15, 20}
     assert out[5].status == "near_dup_of_corpus"
     assert out[5].best_match_doc_id == 1

@@ -1,7 +1,11 @@
-"""Every queries() entry with an oracle must match DuckDB at sf0.001.
+"""The registry sweep: every ``queries()`` entry is built once at
+sf0.001 (``tests.conftest.registry_run``) and checked against what the
+engine promises of it.
 
-This is a faster local version of the driver's CORRECTNESS gate (which runs
-at sf0.01 — tools/oracle_check.py covers that interactively).
+The oracle comparison is a faster local version of the driver's
+CORRECTNESS gate (which runs at sf0.01 — tools/oracle_check.py covers
+that interactively).  The micro-batch plans of the streaming queries
+are checked in tests/test_streaming_plans.py from the same builds.
 """
 
 from __future__ import annotations
@@ -9,53 +13,48 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_SMALL, assert_oracle_match, released_scope
+from tests.conftest import (
+    SF_SMALL,
+    assert_microbatch_plans_within_budget,
+    registry_run,
+)
 
 _QUERIES = entrymod.queries()
 _ORACLES = entrymod.oracle_sql()
 
 
+@pytest.mark.parametrize("name", sorted(_QUERIES))
+def test_query_runs(spark, duck, name):
+    """Every query builds and runs inside ``registry.query_scope``,
+    leaving nothing behind (the driver runs the same weaker rows-only
+    check for entries without an oracle), and keeps the output
+    convention: the driver's correctness gate may check any registry
+    entry, and it canonicalizes results with a pandas sort that dies on
+    list cells (round-6 ``embedding_quantize_int8`` red row:
+    ``TypeError: unhashable type: 'list'``).  So registered outputs
+    carry SCALAR top-level columns only — serialize arrays with
+    ``array_join`` (DuckDB mirror ``array_to_string``) or explode; keep
+    typed-array forms as non-registered library functions (e.g.
+    ``embedding_quantize_int8_vectors``).  Any stream the build starts
+    must keep its micro-batch plans within the batch budgets."""
+    run = registry_run(spark, duck, name)
+    assert run.columns
+    assert not run.complex_cols, (
+        f"{name} returns complex-typed top-level column(s)"
+        f" {run.complex_cols}: the correctness gate cannot canonicalize"
+        " list/struct cells — serialize them (array_join / to_json)"
+        " in the registered query and keep the typed form as a"
+        " library function"
+    )
+    assert_microbatch_plans_within_budget(name, run)
+
+
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_oracle_parity(spark, duck, name):
-    assert name in _QUERIES, f"oracle_sql has {name} but queries() doesn't"
-    with released_scope(spark):
-        sdf = _QUERIES[name](spark, SF_SMALL)
-        assert_oracle_match(sdf, duck, _ORACLES[name])
-
-
-@pytest.mark.parametrize("name", sorted(_QUERIES))
-def test_query_runs(spark, name):
-    """Rows-only smoke for every query (driver runs the same weaker check
-    for entries without an oracle) + the output convention: the driver's
-    correctness gate may check any registry entry, and it canonicalizes
-    results with a pandas sort that dies on list cells (round-6
-    ``embedding_quantize_int8`` red row: ``TypeError: unhashable type:
-    'list'``).  So registered outputs carry SCALAR top-level columns
-    only — serialize arrays with ``array_join`` (DuckDB mirror
-    ``array_to_string``) or explode;
-    keep typed-array forms as non-registered library functions (e.g.
-    ``embedding_quantize_int8_vectors``).
-
-    Built and run inside ``registry.query_scope``: the query must leave
-    no persistent RDD and no cache entry behind."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    with released_scope(spark):
-        df = _QUERIES[name](spark, SF_SMALL)
-        assert df.columns
-        complex_cols = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        ]
-        assert not complex_cols, (
-            f"{name} returns complex-typed top-level column(s)"
-            f" {complex_cols}: the correctness gate cannot canonicalize"
-            " list/struct cells — serialize them (array_join / to_json)"
-            " in the registered query and keep the typed form as a"
-            " library function"
-        )
-        df.limit(5).collect()
+    """Row count, columns and order-insensitive values match DuckDB
+    (the comparison tools/oracle_check.py and the driver's gate make)."""
+    problems = registry_run(spark, duck, name).oracle_problems
+    assert not problems, problems
 
 
 def test_entry_smoke(spark):
@@ -82,6 +81,27 @@ def test_package_shipped_to_python_workers(spark):
         "retail_sales_project_bigdata_spark_pkg" in f
         for f in spark.sparkContext.listFiles
     )
+
+
+def test_second_read_asks_no_application_id(spark, monkeypatch):
+    """``ensure_package_on_workers`` remembers shipped contexts by
+    object, so a read on a context that already has the zip spends no
+    py4j round trips on ``sc.applicationId``."""
+    from pyspark import SparkContext
+
+    from retail_sales_project_bigdata_spark.sources import read_table
+
+    read_table(spark, SF_SMALL, "region")
+    calls = []
+    app_id = SparkContext.applicationId.fget
+
+    def counted(sc):
+        calls.append(1)
+        return app_id(sc)
+
+    monkeypatch.setattr(SparkContext, "applicationId", property(counted))
+    read_table(spark, SF_SMALL, "region")
+    assert not calls
 
 
 _FOREIGN_CWD_SCRIPT = """

@@ -18,7 +18,7 @@ import sys
 
 import pytest
 
-from tests.conftest import REPO, SF_SMALL
+from tests.conftest import REPO, SF_SMALL, cache_entry_count
 
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
@@ -43,12 +43,10 @@ def test_headline_plans_within_budget(spark):
         "`python tools/plan_budget.py` and review the JSON diff"
     )
 
-    # Hermetic environment, matching tools/plan_budget.py's fresh
-    # session: earlier suite tests that call builders outside a scope
-    # leave SQL caches behind, and a cached subtree plans as
-    # InMemoryTableScan — different exchange counts than the checked-in
-    # budgets.
-    spark.catalog.clearCache()
+    # tests/conftest.py runs every test in its own query_scope, so no
+    # earlier test leaves a cached subtree behind; one would plan as
+    # InMemoryTableScan here and hide the exchanges under it.
+    assert cache_entry_count(spark) == 0, "a cache entry outlived its test"
 
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

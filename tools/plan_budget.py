@@ -46,8 +46,9 @@ def budgeted_names(queries: dict) -> list[str]:
     the result table, so its "plan" is a memory scan — the real
     micro-batch plans are compiled per-trigger at runtime.  Those are
     held to the same python_eval/cartesian facts by
-    tests/test_streaming_plans.py, which asserts on the LAST EXECUTED
-    micro-batch plan's facts captured in streaming.LAST_MICROBATCH_FACTS."""
+    tests/test_streaming_plans.py: the registry sweep's one build per
+    name records the streams it starts, and each one's LAST EXECUTED
+    micro-batch plan is read from the stopped query."""
     return sorted(n for n in queries if not n.startswith("streaming_"))
 
 
