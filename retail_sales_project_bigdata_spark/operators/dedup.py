@@ -41,7 +41,7 @@ _TOKENIZE = r"[ ]+"
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup via hash-groupBy (keep min doc_id per text-hash)."""
-    docs = fan_out(read_table(spark, sf_dir, "documents"))
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.withColumn("text_hash", F.md5(F.col("text").cast("binary")))
         .groupBy("text_hash")

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from retail_sales_project_bigdata_spark.functions import pround
-from retail_sales_project_bigdata_spark.sources import fan_out, read_table
+from retail_sales_project_bigdata_spark.sources import read_table
 
 
 def _media_source(
@@ -74,7 +74,7 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     modality assigned round-robin by doc_id) — stands in for a real
     (id, payload, modality, width, height, sample_rate, duration) table.
     """
-    docs = fan_out(read_table(spark, sf_dir, "documents"))
+    docs = read_table(spark, sf_dir, "documents")
     modality = (
         F.when(F.col("doc_id") % 3 == 0, "image")
         .when(F.col("doc_id") % 3 == 1, "audio")

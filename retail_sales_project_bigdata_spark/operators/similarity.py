@@ -63,11 +63,23 @@ def _dot_expr(a: str, b: str) -> F.Column:
     )
 
 
+def _vector_rows(emb: DataFrame) -> DataFrame:
+    """``(vec_id, label, v, norm)`` over an ``embeddings`` frame, on the
+    frame's own partitions.  The numpy callers read the scan as it comes:
+    their map work is one vectorized Python stage, which a round-robin
+    fan-out would only split into more Python tasks (see
+    :func:`sources.fan_out`)."""
+    return _vectors_from_matrix_rows(
+        emb.select(
+            "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
+        )
+    )
+
+
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = fan_out(read_table(spark, sf_dir, "embeddings"))
-    return emb.select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    ).withColumn("norm", F.sqrt(_dot_expr("v", "v")))
+    """:func:`_vector_rows` of the fanned-out scan, for the callers whose
+    map work is per-pair 64-term dot products."""
+    return _vector_rows(fan_out(read_table(spark, sf_dir, "embeddings")))
 
 
 def _vectors_from_matrix_rows(df: DataFrame) -> DataFrame:
@@ -81,7 +93,10 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Broadcast queries × partitioned corpus → per-query ranking window.
     """
-    vecs = _vectors(spark, sf_dir)
+    return _bruteforce_topk_from(_vectors(spark, sf_dir))
+
+
+def _bruteforce_topk_from(vecs: DataFrame) -> DataFrame:
     queries = (
         vecs.filter(F.col("vec_id") < N_QUERY_VECS)
         .select(
@@ -169,7 +184,7 @@ def _bucket_expr(vec_col: str = "v") -> F.Column:
 def lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane (SimHash-for-cosine) signatures: bit_i =
     sign(v · plane_i)."""
-    vecs = _vectors(spark, sf_dir)
+    vecs = _vector_rows(read_table(spark, sf_dir, "embeddings"))
     return vecs.select("vec_id", "label", _bucket_expr().alias("bucket"))
 
 
@@ -177,10 +192,14 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase ANN: LSH bucket match (cheap candidates) → exact cosine
     rerank within candidates.  Recall vs ann_bruteforce_topk is
     property-tested; rows-only for the driver (approximate by design)."""
+    return _lsh_topk_from(_vectors(spark, sf_dir))
+
+
+def _lsh_topk_from(vecs: DataFrame) -> DataFrame:
     # Bucket attached MAP-SIDE via the shared expression — joining the
     # lsh_signatures frame back on vec_id would rescan embeddings and
     # shuffle both sides to rebuild a column that is a pure function of v.
-    with_sig = _vectors(spark, sf_dir).withColumn("bucket", _bucket_expr())
+    with_sig = vecs.withColumn("bucket", _bucket_expr())
     queries = (
         with_sig.filter(F.col("vec_id") < N_QUERY_VECS)
         .select(
@@ -1072,7 +1091,7 @@ def ann_bruteforce_topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    vecs = _vectors(spark, sf_dir)
+    vecs = _vector_rows(read_table(spark, sf_dir, "embeddings"))
     q_rows = (
         vecs.filter(F.col("vec_id") < N_QUERY_VECS)
         .select("vec_id", "v", "norm")
@@ -1136,7 +1155,7 @@ def embedding_near_dup_pairs_numpy(
         guard_anchor_rows,
     )
 
-    vecs = _vectors(spark, sf_dir)
+    vecs = _vector_rows(read_table(spark, sf_dir, "embeddings"))
     guard_anchor_rows(
         vecs,
         "embedding_near_dup_pairs_numpy",
@@ -1236,10 +1255,8 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos0") + 1).alias("pos"),  # 1-based, matches DuckDB subscripts
         F.col("val").cast("double").alias("val"),
     )
-    return (
-        fan_out(flat)
-        .groupBy("label", "pos")
-        .agg(ordered_avg("val").alias("centroid_val"))
+    return flat.groupBy("label", "pos").agg(
+        ordered_avg("val").alias("centroid_val")
     )
 
 
@@ -1809,9 +1826,14 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds one cheap stage, which is why recall monitoring can run on
     every index build.  The single division per row keeps the double
     deterministic (one correctly-rounded op, then round to 6).
+
+    Both paths read the scan unfanned: here, unlike in either top-k query
+    alone, a round-robin fan-out cost more than it saved (see
+    :func:`sources.fan_out`).
     """
-    exact = ann_bruteforce_topk(spark, sf_dir).select("q_id", "neighbor_id")
-    approx = ann_lsh_topk(spark, sf_dir).select(
+    vecs = _vector_rows(read_table(spark, sf_dir, "embeddings"))
+    exact = _bruteforce_topk_from(vecs).select("q_id", "neighbor_id")
+    approx = _lsh_topk_from(vecs).select(
         "q_id", "neighbor_id", F.lit(1).alias("_hit")
     )
     return (
@@ -1873,7 +1895,7 @@ def embedding_quantize_int8_vectors(
     order by Spark and DuckDB, so the int codes match bit-for-bit —
     unlike summation-order-dependent dot products, no fold is involved.
     """
-    emb = fan_out(read_table(spark, sf_dir, "embeddings"))
+    emb = read_table(spark, sf_dir, "embeddings")
     v = F.expr("transform(embedding, x -> cast(x as double))")
     base = emb.select("vec_id", v.alias("v"))
     scaled = base.withColumn(

@@ -43,7 +43,12 @@ def _tokens(col: str = "text") -> F.Column:
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features: token count, char stats, alpha ratio,
     stopword ratio, and a thresholded quality flag."""
-    docs = fan_out(read_table(spark, sf_dir, "documents"))
+    return text_quality_of(read_table(spark, sf_dir, "documents"))
+
+
+def text_quality_of(docs: DataFrame) -> DataFrame:
+    """:func:`text_quality` over a given ``documents`` frame, on its own
+    partitions (a caller with heavier work downstream may fan it out)."""
     toks = _tokens()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     df = docs.select(

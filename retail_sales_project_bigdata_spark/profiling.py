@@ -87,7 +87,9 @@ def codegen_compiles(spark: SparkSession) -> int:
     one per generated-class cache miss (``CodegenMetrics``' compile-time
     histogram count).  JVM-wide, so a delta over a span also counts what
     other threads compiled in it."""
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    # One fully qualified lookup is one py4j round trip; a dotted walk
+    # costs one per package segment.
+    metrics = getattr(spark._jvm, "org.apache.spark.metrics.source.CodegenMetrics")
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 

@@ -27,17 +27,31 @@ from retail_sales_project_bigdata_spark.schemas import (
 
 
 def fan_out(df: DataFrame) -> DataFrame:
-    """Raise scan parallelism for compute-heavy map phases (S3 note).
+    """Round-robin an under-parallel scan to ``defaultParallelism``
+    partitions, in front of heavy JVM map work only (S3 note).
 
     The driver testdata is single-row-group parquet — unsplittable, so a
-    scan arrives as ONE partition and everything up to the first shuffle
-    (shingling, 64-term dot products, mapInPandas batches) runs on one
-    core of ``local[32]``.  This helper inserts a round-robin repartition
-    to ``defaultParallelism`` ONLY when the scan is under-parallel; on
-    production inputs (many files / row groups ⇒ scan partitions ≥ cores)
-    it is a structural no-op, so the 100 TB plan is unchanged.  Use it
-    where the downstream map work dominates the tiny extra shuffle —
-    never in front of a plain aggregate whose map side is trivial.
+    scan arrives as ONE partition and its map phase runs on one core of
+    ``local[32]``.  This helper inserts a round-robin repartition ONLY
+    when the scan is under-parallel; on production inputs (many files /
+    row groups ⇒ scan partitions ≥ cores) it is a structural no-op, so
+    the 100 TB plan is unchanged.
+
+    The repartition is not free: it adds a shuffle job, and every task it
+    creates in front of a Python stage pays PySpark's per-task worker
+    set-up.  On Python 3.11 that set-up (``importlib.invalidate_caches()``
+    re-reading the zip directory behind each zip importer on the worker's
+    path) costs ~105 ms per task before a row is read.  So:
+
+    - fan out in front of heavy JVM map work: per-pair 64-term dot
+      products, MinHash shingling.  Without it (sf0.1, 4 cores)
+      ``embedding_near_dup_pairs`` ran 3.4× and ``semantic_dedup`` 1.4×
+      as long;
+    - never in front of a plain aggregate, a per-row projection or a
+      vectorized Python stage (``mapInPandas``).  Without it (sf0.1,
+      4 cores) ``dedup_exact``, the media ops, the numpy ANN,
+      ``embedding_centroids`` and ``embedding_quantize_int8`` ran in
+      0.54–0.84 of the time, and ``text_quality`` broke even.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
@@ -391,7 +405,7 @@ def write_single_file(df: DataFrame, path: str, fmt: str = "parquet") -> str:
     spark = df.sparkSession
     jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
+    HPath = getattr(jvm, "org.apache.hadoop.fs.Path")
     dst = HPath(path)
     fs = dst.getFileSystem(hconf)
     if fs.exists(dst) and fs.getFileStatus(dst).isDirectory():
@@ -443,12 +457,12 @@ def upload_to_fs(
         raise FileNotFoundError(local_path)
     jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
+    HPath = getattr(jvm, "org.apache.hadoop.fs.Path")
     # Source URI via java.io.File(...).toURI() — proper percent-encoding,
     # so local paths containing '#', '%', or spaces survive (a string
     # concat "file://" + path would let Hadoop Path parse '#' as a URI
     # fragment separator).  Path(URI) skips string re-parsing entirely.
-    src = HPath(jvm.java.io.File(_os.path.abspath(local_path)).toURI())
+    src = HPath(getattr(jvm, "java.io.File")(_os.path.abspath(local_path)).toURI())
     dst = HPath(dest_uri)
     fs = dst.getFileSystem(hconf)
     try:

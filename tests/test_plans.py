@@ -327,3 +327,36 @@ def test_ngram_lm_counts_partial_topk(spark):
     df = ngram_lm_counts(spark, SF_SMALL)
     assert "WindowGroupLimit" in physical_plan(df)
     assert_no_python_eval(df)
+
+
+def test_fan_out_only_in_front_of_heavy_map_work(spark):
+    """The single-file test scan arrives as one partition.  Plain
+    aggregates, per-row projections and vectorized Python stages read it
+    as it comes; per-pair dot-product work still fans it out."""
+    from retail_sales_project_bigdata_spark.operators.dedup import dedup_exact
+    from retail_sales_project_bigdata_spark.operators.multimodal import (
+        decode_media,
+        resize_media,
+    )
+    from retail_sales_project_bigdata_spark.operators.similarity import (
+        ann_bruteforce_topk_numpy,
+        embedding_near_dup_pairs,
+        semantic_dedup,
+    )
+    from retail_sales_project_bigdata_spark.operators.textstats import (
+        text_quality,
+    )
+    from retail_sales_project_bigdata_spark.plans import node_class, nodes
+
+    def round_robin_exchanges(df):
+        return sum(
+            node_class(n) == "ShuffleExchangeExec"
+            and node_class(n.outputPartitioning()) == "RoundRobinPartitioning"
+            for n in nodes(df)
+        )
+
+    for q in (text_quality, dedup_exact, resize_media, decode_media,
+              ann_bruteforce_topk_numpy):
+        assert round_robin_exchanges(q(spark, SF_SMALL)) == 0, q.__name__
+    for q in (embedding_near_dup_pairs, semantic_dedup):
+        assert round_robin_exchanges(q(spark, SF_SMALL)) >= 1, q.__name__
